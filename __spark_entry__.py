@@ -1,8 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Query-registry entry points (PySpark target).
 
 ``entry(spark)`` smoke-runs the flagship query at sf0.001; ``queries()`` /
 ``oracle_sql()`` expose every implemented operator from SURVEY.md §2 (plus
-the scale extensions) for the driver's DuckDB correctness gate at sf0.01.
+the scale extensions), in registration order, with their DuckDB oracle SQL
+for the oracle mirror at sf0.01 (``tests/test_correctness_mirror.py``).
 """
 
 from __future__ import annotations

@@ -34,11 +34,10 @@ _DEFAULTS = {
     # listing JOB for every read of a >32-partition local store (the
     # banded LSH index has 256), paying job-scheduling latency to list
     # directories a local FS stats in microseconds.  On object stores —
-    # where parallel listing earns its keep — set the env override low
-    # again; manifest-backed table formats avoid the listing entirely
-    # (optimization guide §6).
-    "spark.sql.sources.parallelPartitionDiscovery.threshold":
-        os.environ.get("SPARK_GRAFT_PARTITION_DISCOVERY_THRESHOLD", "1024"),
+    # where parallel listing earns its keep — pass a low threshold through
+    # ``extra_conf``; manifest-backed table formats avoid the listing
+    # entirely (optimization guide §6).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     # UI off for test/bench runs; a real deployment can re-enable.
     "spark.ui.enabled": "false",
 }
@@ -76,8 +75,7 @@ def get_spark(app_name: str = "localsql_spark", master: str | None = None,
     # Compute-dense small-byte frames widen EXPLICITLY instead
     # (operators.similarity.spread / _rotate_frame's repartition).
     builder = builder.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1m"))
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():

@@ -17,13 +17,11 @@ reentrant without weakening the sibling-thread Busy contract.
 Pool width is driver-orchestration width, not a data-scale knob: 2-4
 chains in flight is enough to fill a stage tail at any cluster size
 (the guide's own guidance), so the default of 4 is not a local[32]
-tuning.  ``SPARK_GRAFT_STORE_PASS_THREADS=1`` restores strictly
-sequential passes.
+tuning.  ``max_workers=1`` runs the tasks strictly sequentially.
 """
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable
 
@@ -31,7 +29,7 @@ __all__ = ["run_overlapped"]
 
 
 def run_overlapped(tasks: list[tuple[str, Callable[[], Any]]],
-                   max_workers: int | None = None,
+                   max_workers: int = 4,
                    spark=None) -> dict[str, Any]:
     """Run ``(key, thunk)`` tasks concurrently on Spark-inheritable
     threads; return ``{key: result}``.
@@ -41,9 +39,6 @@ def run_overlapped(tasks: list[tuple[str, Callable[[], Any]]],
     run, exactly as with the sequential form's earlier-stores-finished
     partial failure); the first failure is re-raised afterwards.
     """
-    if max_workers is None:
-        max_workers = int(os.environ.get("SPARK_GRAFT_STORE_PASS_THREADS",
-                                         "4"))
     if len(tasks) <= 1 or max_workers <= 1:
         return {k: fn() for k, fn in tasks}
     try:

@@ -1,8 +1,9 @@
 """Workload registry: every operator from SURVEY.md §2 (plus the scale
 extensions) is declared here as a (spark_query, oracle_sql) pair consumed by
-``__spark_entry__.py`` and the driver's DuckDB correctness gate.
+``__spark_entry__.py`` and the DuckDB oracle mirror
+(``tests/test_correctness_mirror.py``), which re-proves every entry.
 
-Determinism policy (the driver hash-compares values order-insensitively):
+Determinism policy (the mirror compares values order-insensitively):
 
 - money/quantity aggregates go through DECIMAL so partial-aggregation order
   (Spark) vs sequential order (DuckDB) cannot perturb low bits;
@@ -52,479 +53,16 @@ def load(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return register_testdata(spark, sf_dir)
 
 
-# Names with a fully-green driver CORRECTNESS row in a prior round
-# (CORRECTNESS_r01.json: 49/50 checked entries passed; CORRECTNESS_r02.json:
-# 50/50. The driver checks a bounded prefix of ``queries()``, so
-# previously-verified entries yield their slots to the ones still awaiting a
-# hard-signal row).
-DRIVER_VERIFIED: frozenset[str] = frozenset({
-    # --- green in CORRECTNESS_r02.json (all 50 checked entries passed) ---
-    "window_exclude_emulated", "unpivot_metrics", "lateral_topk_per_nation",
-    "fn_math_suite", "fn_strftime_modifiers", "dedup_simhash",
-    "sample_documents_hashmod", "text_bm25_scores", "embedding_int8_quantize",
-    "pack_documents_2048", "decontaminate_training_set", "text_bpe_token_count",
-    "mix_sources_weighted", "text_tfidf_top_terms", "dedup_levenshtein_pairs",
-    "events_funnel_conversion", "sketch_countmin_terms", "events_tumbling_hourly",
-    "events_sliding_1h_30m", "events_session_30m", "asof_join_purchase_click",
-    "salted_agg_event_type", "range_join_purchase_error_5m", "events_props_json",
-    "hll_distinct_users", "percentiles_by_event_type", "histogram_order_totals",
-    "events_props_variant", "salted_join_user_tags", "multimodal_features",
-    "multimodal_frame_sample", "multimodal_resize", "multimodal_audio_energy",
-    "dedup_minhash_pairs", "dedup_ngram_jaccard", "knn_brute_force_top5",
-    "knn_lsh_bucketed_top5", "knn_ivf_top5", "embedding_near_dup",
-    "pipeline_clean_corpus", "dedup_simhash_pairs", "dedup_clusters",
-    "dedup_clusters_bigstar", "streaming_tumbling_hourly",
-    "streaming_stateful_user_stats", "grouped_zscore_pandas",
-    "cogroup_user_activity", "streaming_dedup_events", "streaming_session_30m",
-    "streaming_join_attribution",
-    # --- green in CORRECTNESS_r01.json ---
-    "q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
-    "q6_forecast_revenue", "left_join_order_counts", "right_full_outer_join",
-    "anti_join_customers_without_orders", "semi_join_parts_ordered",
-    "cross_join_region_pairs", "theta_join_price_band",
-    "group_concat_suppliers", "having_count_distinct",
-    "distinct_case_projection", "order_nulls_limit_offset",
-    "ordinal_group_order", "setop_union_distinct", "setop_union_all_counts",
-    "setop_intersect", "setop_except", "window_rank_top3_orders",
-    "window_lag_lead_events", "window_running_sum", "window_ntile_percentile",
-    "scalar_subquery_above_avg", "correlated_subquery_above_nation_avg",
-    "in_subquery_parts", "cte_two_level", "derived_table_exists",
-    "rollup_region_nation", "cube_status_priority",
-    "pivot_returnflag_by_status", "explode_embedding_positions",
-    "recursive_cte_monthly_orders", "window_analytic_first_last_nth",
-    "window_range_frame_value", "fn_string_suite", "fn_like_glob",
-    "fn_transcendental", "fn_datetime_suite", "fn_null_conditional",
-    "fn_json_suite", "fn_cast_typeconv", "fn_string_suite2",
-    "text_token_stats", "text_quality_scores", "text_langid",
-    "text_fingerprint", "dedup_exact_documents", "dedup_minhash_signature",
-    # --- green in CORRECTNESS_r03.json (all 50 checked entries passed;
-    #     the 13 below were the round-3 _DEFERRED rotation) ---
-    "qualify_top_suppliers", "grouping_sets_orders", "fn_stats_suite",
-    "fn_array_suite", "text_pii_redact", "text_repetition_signals",
-    "split_train_val_test", "sketch_bloom_membership",
-    "streaming_enrich_static", "embedding_kmeans_clusters",
-    "events_retention_cohorts", "basket_part_pairs",
-    "table_fingerprint_documents",
-    # --- green in CORRECTNESS_r04.json (all 50 checked entries passed;
-    #     the 12 below were the round-4 additions) ---
-    "q18_large_volume_orders", "q21_sole_return_supplier",
-    "pipeline_dedup_decisions", "merge_upsert_documents", "sketch_quantiles",
-    "fingerprint_drift", "semdedup_keep", "sample_per_lang_topk",
-    "dedup_incremental_new_batch", "streaming_late_data",
-    "hll_distinct_users_by_type", "streaming_upsert_latest_event",
-    # --- green in CORRECTNESS_r05.json (all 50 checked entries passed;
-    #     the 50 below were the round-5 additions) ---
-    "bpe_encode_fixed", "bpe_pair_stats", "chunk_documents_64_16",
-    "corpus_health_by_source", "decontaminate_minhash",
-    "dedup_containment_pairs", "dedup_exact_incremental",
-    "dedup_incremental_banded", "dedup_incremental_store",
-    "dedup_repeated_spans", "diff_orders_versions", "dsir_importance_weights",
-    "dsir_resample_top200", "export_training_shards", "gopher_quality_rules",
-    "histogram_equidepth_values", "hll_user_overlap", "knn_ivf_index_top5",
-    "knn_pq_rerank_top5", "knn_pq_top5", "mix_sources_temperature",
-    "orders_segment_asof", "pagerank_event_transitions",
-    "pipeline_incremental_ingest", "profile_orders_columns",
-    "q10_returned_items", "q11_important_parts", "q12_priority_by_returnflag",
-    "q13_customer_distribution", "q14_promo_revenue_pct", "q15_top_supplier",
-    "q16_supplier_cnt_by_part", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue", "q20_dominant_part_suppliers",
-    "q22_global_sales_opportunity", "q2_min_price_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "quarantine_orders_rows", "rollup_incremental_hourly",
-    "scd2_customer_history", "sketch_quantiles_by_type",
-    "streaming_dedup_ingest", "streaming_quarantine_events",
-    "text_unigram_logprob", "validate_orders_constraints",
-    "zorder_zvalue_orders",
-})
-
-
-# Heavy pending entries (iterative CC, LSH self-joins, streaming drains,
-# kNN scans) go LAST within the pending block: if the driver's check budget
-# is time-based rather than a fixed count, cheap row-local queries first
-# maximizes how many entries earn a CORRECTNESS row.
-_HEAVY = frozenset({
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "dedup_ngram_jaccard",
-    "dedup_clusters", "dedup_clusters_bigstar", "pipeline_clean_corpus",
-    "knn_brute_force_top5", "knn_lsh_bucketed_top5", "knn_ivf_top5",
-    "embedding_near_dup", "grouped_zscore_pandas", "cogroup_user_activity",
-    "streaming_tumbling_hourly", "streaming_stateful_user_stats",
-    "streaming_dedup_events", "streaming_session_30m",
-    "streaming_join_attribution",
-    # round 6: stream drains + kmeans|| training are the slow pendings —
-    # sort them after the cheap row-local round-6 additions so a
-    # time-budgeted driver check reaches every cheap entry first
-    "streaming_rollup_hourly", "streaming_scd2_ingest",
-    # round 7: streaming IVF drain
-    "streaming_ivf_ingest_top5",
-})
-
-
-# Queries added after the current round's 50-entry driver window was already
-# full of still-unverified entries. They sort after the heavy pending block so
-# they cannot displace a query that has been waiting for its CORRECTNESS row
-# since round 1; they enter the window themselves once DRIVER_VERIFIED is
-# refreshed from the next CORRECTNESS_r{N}.json.  (Every query registered
-# through round 3 now has a green row, so the set is empty — round-4
-# additions go straight into the pending block at the window head.)
-# Round 5 registered 52 never-checked queries against the 50-entry window
-# and deferred two whose semantics were most redundantly covered elsewhere
-# (scd2_customer_asof shares its operator path with scd2_customer_history
-# and orders_segment_asof; bpe_pair_stats_round2 with bpe_pair_stats and
-# bpe_encode_fixed — all in-window and green in r5).  With DRIVER_VERIFIED
-# refreshed from CORRECTNESS_r05 those two now head the round-6 window, so
-# nothing is deferred.
-_DEFERRED: frozenset[str] = frozenset()
-
-
-def _repo_root():
-    from pathlib import Path
-    return Path(__file__).resolve().parents[2]
-
-
-def _row_is_green(row: dict) -> bool:
-    """A full pass, or the documented rows-only pass for oracle-less
-    entries (the driver records err='no_oracle' with a row count)."""
-    if row.get("err") == "no_oracle":
-        return row.get("spark_rows") is not None
-    return bool(row.get("rows_match") and row.get("schema_match")
-                and row.get("hash_match"))
-
-
-_green_cache: dict[str, int] | None = None
-
-
-def _last_green_rounds() -> dict[str, int]:
-    """query name -> highest round with a green driver CORRECTNESS row,
-    parsed from the committed CORRECTNESS_r*.json files."""
-    import json
-    import re
-
-    global _green_cache
-    if _green_cache is not None:
-        return _green_cache
-    out: dict[str, int] = {}
-    for p in sorted(_repo_root().glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if isinstance(row, dict) and _row_is_green(row):
-                out[name] = max(out.get(name, -1), rnd)
-    _green_cache = out
-    return out
-
-
-def _fn_span_src(tree, src: str, fn_name: str) -> str | None:
-    """Source text of top-level function ``fn_name`` INCLUDING its
-    decorators (the @query decorator carries the oracle SQL, so oracle
-    edits count as changes too).  None if not found."""
-    import ast
-
-    lines = src.splitlines()
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
-                and node.name == fn_name:
-            start = min([node.lineno]
-                        + [d.lineno for d in node.decorator_list]) - 1
-            return "\n".join(lines[start:node.end_lineno])
-    return None
-
-
-def _module_analysis(path) -> dict:
-    """Parse one workload module: its AST + source + a map from local
-    alias name -> localsql_spark module name for every module-level
-    import (``from localsql_spark.operators import dedup as D`` maps
-    ``D`` -> ``localsql_spark.operators.dedup``; a plain function import
-    maps the function name to its defining module)."""
-    import ast
-
-    src = path.read_text()
-    tree = ast.parse(src)
-    aliases: dict[str, str] = {}
-    for node in tree.body:
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.startswith("localsql_spark"):
-                    aliases[a.asname or a.name.split(".")[0]] = a.name
-        elif isinstance(node, ast.ImportFrom) and node.module \
-                and node.module.startswith("localsql_spark"):
-            for a in node.names:
-                sub = f"{node.module}.{a.name}"
-                aliases[a.asname or a.name] = sub
-    return {"src": src, "tree": tree, "aliases": aliases}
-
-
-def _module_closure(mod_name: str, seen: set) -> set:
-    """Transitive localsql_spark import closure of one module (files)."""
-    import ast
-    import importlib
-    from pathlib import Path
-
-    files: set = set()
-    stack = [mod_name]
-    while stack:
-        name = stack.pop()
-        if name in seen or not name.startswith("localsql_spark"):
-            continue
-        seen.add(name)
-        try:
-            f = getattr(importlib.import_module(name), "__file__", None)
-        except ImportError:
-            continue
-        if not f:
-            continue
-        files.add(Path(f))
-        try:
-            tree = ast.parse(Path(f).read_text())
-        except (OSError, SyntaxError):
-            continue
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                stack.extend(a.name for a in node.names)
-            elif isinstance(node, ast.ImportFrom) and node.module:
-                stack.append(node.module)
-                stack.extend(f"{node.module}.{a.name}"
-                             for a in node.names)
-    return files
-
-
-def _fn_dep_files(fn, analysis: dict) -> frozenset:
-    """Operator-module files this specific query function depends on:
-    modules named by aliases the function body actually REFERENCES, plus
-    its own function-local imports, each expanded transitively.  The
-    registry module itself (pure check-ordering plumbing) is excluded;
-    catalog.py (every query's ``load`` path) is always included."""
-    import ast
-    import importlib
-    from pathlib import Path
-
-    mods: set[str] = set()
-    node = None
-    for n in analysis["tree"].body:
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) \
-                and n.name == fn.__name__:
-            node = n
-            break
-    if node is not None:
-        refs = {x.id for x in ast.walk(node) if isinstance(x, ast.Name)}
-        for name in refs & set(analysis["aliases"]):
-            target = analysis["aliases"][name]
-            try:
-                importlib.import_module(target)
-                mods.add(target)
-            except ImportError:  # a function import: dep on its module
-                mods.add(target.rsplit(".", 1)[0])
-        for x in ast.walk(node):
-            if isinstance(x, ast.Import):
-                mods.update(a.name for a in x.names
-                            if a.name.startswith("localsql_spark"))
-            elif isinstance(x, ast.ImportFrom) and x.module \
-                    and x.module.startswith("localsql_spark"):
-                mods.add(x.module)
-                for a in x.names:
-                    mods.add(f"{x.module}.{a.name}")
-    seen: set = {"localsql_spark.workload"}
-    files: set = set()
-    for m in mods:
-        files |= _module_closure(m, seen)
-    files.add(Path(__file__).resolve().parents[1] / "catalog.py")
-    registry_file = Path(__file__).resolve()
-    return frozenset(f for f in files if f != registry_file)
-
-
-def _compute_changed_since_verified() -> frozenset:
-    """Names of verified queries whose implementing source changed AFTER
-    the round of their last green driver row — the silent-regression
-    channel: without this they would never re-enter the driver's bounded
-    check window, so a semantics-changing edit to already-green code
-    would keep its stale green row forever.
-
-    'Changed' = the query FUNCTION's own source (decorators included, so
-    the oracle SQL counts) differs from its text at the commit that
-    recorded that round's CORRECTNESS file, OR any operator-module file
-    the function references has a newer commit / is dirty in the tree.
-    Function-level granularity on the workload modules keeps an edit to
-    one query from flooding the window with its 100 module-mates."""
-    import ast
-    import subprocess
-    from pathlib import Path
-
-    repo = _repo_root()
-
-    def git(*args) -> str:
-        return subprocess.run(("git", *args), cwd=repo, timeout=30,
-                              capture_output=True, text=True,
-                              check=True).stdout
-
-    last_green = _last_green_rounds()
-    if not last_green:
-        return frozenset()
-    dirty = {repo / line[3:].strip().strip('"')
-             for line in git("status", "--porcelain").splitlines() if line}
-
-    ts_cache: dict = {}
-
-    def last_commit_ts(path) -> int:
-        if path not in ts_cache:
-            out = git("log", "-1", "--format=%ct", "--", str(path)).strip()
-            ts_cache[path] = int(out) if out else 0
-        return ts_cache[path]
-
-    rounds = set(last_green.values())
-    round_ts = {r: last_commit_ts(repo / f"CORRECTNESS_r{r:02d}.json")
-                for r in rounds}
-    round_commit = {r: git("rev-list", "-1", "HEAD", "--",
-                           f"CORRECTNESS_r{r:02d}.json").strip()
-                    for r in rounds}
-
-    analysis_cache: dict = {}
-    old_analysis_cache: dict = {}
-    dep_cache: dict = {}
-    _DIRTY_TS = 1 << 62  # working-tree edits are the most recent of all
-    changed: dict[str, int] = {}
-    for name, spec in REGISTRY.items():
-        rnd = last_green.get(name)
-        if rnd is None or round_ts.get(rnd, 0) == 0 \
-                or not round_commit.get(rnd):
-            continue
-        mod_file = Path(spec.fn.__code__.co_filename)
-        if mod_file not in analysis_cache:
-            analysis_cache[mod_file] = _module_analysis(mod_file)
-        ana = analysis_cache[mod_file]
-        # 1. operator deps: module granularity vs the round's commit time
-        key = (mod_file, spec.fn.__name__)
-        if key not in dep_cache:
-            dep_cache[key] = _fn_dep_files(spec.fn, ana)
-        dep_ts = [_DIRTY_TS if f in dirty else last_commit_ts(f)
-                  for f in dep_cache[key]]
-        stale_ts = max((t for t in dep_ts if t > round_ts[rnd]), default=0)
-        if stale_ts:
-            changed[name] = stale_ts
-            continue
-        # 2. the function's own text: only if its module moved at all
-        if mod_file not in dirty and last_commit_ts(mod_file) <= round_ts[rnd]:
-            continue
-        rel = mod_file.relative_to(repo)
-        okey = (rnd, rel)
-        if okey not in old_analysis_cache:
-            try:
-                old_src = git("show", f"{round_commit[rnd]}:{rel}")
-                old_analysis_cache[okey] = (old_src, ast.parse(old_src))
-            except (subprocess.CalledProcessError, SyntaxError):
-                old_analysis_cache[okey] = None
-        old = old_analysis_cache[okey]
-        mod_ts = _DIRTY_TS if mod_file in dirty else last_commit_ts(mod_file)
-        if old is None:  # module didn't exist then — definitely changed
-            changed[name] = mod_ts
-            continue
-        now = _fn_span_src(ana["tree"], ana["src"], spec.fn.__name__)
-        then = _fn_span_src(old[1], old[0], spec.fn.__name__)
-        if now is None or then is None or now != then:
-            changed[name] = mod_ts
-    return changed
-
-
-_changed_cache: dict | None = None
-
-
-def _changed_since_verified() -> dict:
-    """name -> staleness timestamp (newest changed-dep commit; working-
-    tree edits rank newest of all)."""
-    global _changed_cache
-    if _changed_cache is None:
-        try:
-            _changed_cache = _compute_changed_since_verified()
-        except Exception:  # no git / no repo — fall back to static order
-            _changed_cache = {}
-    return _changed_cache
-
-
-# Verified queries whose SEMANTICS were deliberately edited after their
-# last green driver row — they must re-earn an independent CORRECTNESS
-# row before anything else in the stale block (the automatic
-# changed-since-verified scan is module-granular on operator deps, so on
-# a round that touches a widely-imported module it can flag more entries
-# than one 50-slot driver window holds; this set pins the ones that MUST
-# land this round).  Refresh each round: drop names once their new green
-# row appears in the latest CORRECTNESS file.
-_MUST_RECHECK: tuple[str, ...] = (
-    # Round 14 rewrote these queries' compute paths (Arrow fingerprint
-    # kernels, driver-side eigen/pagerank/BPE/CC small-regime paths) but
-    # the round-14 driver window sampled other entries, so their green
-    # rows predate the rewrite (r14 verdict item 2).  Pin them so the
-    # round-15 driver window re-hashes the NEW code.  pca_pc1_scores
-    # already re-enters via the changed-since-verified scan.
-    "multimodal_phash_pairs", "multimodal_audio_pairs",
-    "pagerank_event_transitions", "bpe_train_merges",
-    "dedup_clusters_bigstar", "pca_pc1_scores",
-    # Round 15 rewrote these queries' compute paths (Arrow JL projection,
-    # driver-side ccnet edges, minhash literal-constants fold, Arrow
-    # rotation kernel); the module-granular changed-scan alone would let
-    # them lose window slots to incidentally-flagged module-mates.
-    "knn_jl_top5", "ccnet_perplexity_buckets", "dedup_minhash_pairs",
-    "knn_ivfpq_rot_index_top5",
-)
-
-
-# Record-hygiene rotation: how many of the OLDEST driver greens to
-# re-surface at the head of the stale block each round, so no entry's
-# independent driver CORRECTNESS row ages indefinitely even though the
-# pytest oracle mirror re-proves every entry every round.  Ten slots per
-# 50-entry window re-earns the whole 250-query registry's records about
-# every five rounds.
-_N_ROTATE = 10
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    """Registry in driver-check priority order: entries WITHOUT a green
-    CORRECTNESS row from a prior round first (cheap before heavy, then
-    newly-added deferred, registration order within each class), then
-    verified entries whose implementing code CHANGED after their green
-    round (stale greens — they must re-earn an independent driver row),
-    stably-verified ones last."""
-    _ensure_loaded()
-    verified = DRIVER_VERIFIED | set(_last_green_rounds())
-    changed = _changed_since_verified()
-    pending_cheap = {n: s for n, s in REGISTRY.items()
-                     if n not in verified and n not in _HEAVY
-                     and n not in _DEFERRED}
-    pending_heavy = {n: s for n, s in REGISTRY.items()
-                     if n not in verified and n in _HEAVY}
-    deferred = {n: s for n, s in REGISTRY.items()
-                if n not in verified and n in _DEFERRED}
-    must = [n for n in _MUST_RECHECK if n in REGISTRY and n in verified]
-    # oldest-green rotation (record hygiene): the _N_ROTATE entries whose
-    # latest driver row is oldest re-enter the window ahead of the
-    # automatically-flagged stale block — stale entries displaced past
-    # the window edge re-flag themselves next round, so nothing is lost
-    green_round = _last_green_rounds()
-    rotate = sorted(
-        (n for n in REGISTRY if n in verified and n not in must),
-        key=lambda n: (green_round.get(n, 0), n))[:_N_ROTATE]
-    stale_rest = sorted(
-        (n for n in REGISTRY
-         if n in verified and n in changed
-         and n not in must and n not in rotate),
-        key=lambda n: (n in _HEAVY, -changed[n]))  # cheap + newest first
-    stale = {n: REGISTRY[n] for n in (*must, *rotate, *stale_rest)}
-    done_rest = sorted(
-        (n for n in REGISTRY if n in verified and n not in stale),
-        key=lambda n: (green_round.get(n, 0), n))  # oldest records first
-    done = {n: REGISTRY[n] for n in done_rest}
-    return {**pending_cheap, **pending_heavy, **deferred, **stale, **done}
-
-
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.fn for name, spec in _ordered().items()}
+    """Every registered query, in registration order."""
+    _ensure_loaded()
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in _ordered().items()
+    """DuckDB oracle SQL of every registered query that has one."""
+    _ensure_loaded()
+    return {name: spec.oracle for name, spec in REGISTRY.items()
             if spec.oracle is not None}
 
 

@@ -1,24 +1,14 @@
-"""Local mirror of the driver's correctness gate: run every ``queries()``
-entry on Spark at sf0.01 and compare against its ``oracle_sql()`` twin on
-DuckDB — same columns (sorted by name), same row count, same values
-(order-insensitive).
+"""Oracle mirror: run every ``queries()`` entry on Spark at sf0.01 and
+compare against its ``oracle_sql()`` twin on DuckDB — same columns (sorted
+by name), same row count, same values (order-insensitive).
 
-This is the highest-value test in the repo: if it's green here, the driver's
-CORRECTNESS_r{N}.json should be green too.
-
-The FULL mirror (~280 queries, ~30 min) exceeds the driver's pytest window,
-so the default run mirrors only the queries that actually need re-proving:
-entries with no green driver row yet, entries whose implementing code
-changed after their last green row (the same changed-since-verified scan
-that orders the driver window), and the pinned ``_MUST_RECHECK`` set.
-``SPARK_GRAFT_FULL_MIRROR=1`` restores the exhaustive run (used in the
-builder's own loop before committing optimization work).
+This is the highest-value test in the repo: it re-proves every registry
+entry on each run, one test per entry.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import pytest
 
@@ -66,30 +56,11 @@ def _pairs():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    pairs = [(name, fn, oracles.get(name)) for name, fn in sorted(qs.items())]
-    if os.environ.get("SPARK_GRAFT_FULL_MIRROR"):
-        return pairs
-    from localsql_spark import workload
-    verified = workload.DRIVER_VERIFIED | set(workload._last_green_rounds())
-    changed = workload._changed_since_verified()
-    must = ({n for n in workload.REGISTRY if n not in verified}
-            | set(workload._MUST_RECHECK))
-    # The changed-since-verified scan is module-granular, so one commit to
-    # a widely-imported module flags hundreds of entries; cap the default
-    # mirror at one driver-window's worth, newest staleness first (the
-    # same prioritisation the driver window uses).  The full registry is
-    # still re-proved under SPARK_GRAFT_FULL_MIRROR=1.
-    budget = 50
-    ranked = sorted((n for n in changed if n not in must),
-                    key=lambda n: -changed[n])
-    need = must | set(ranked[:max(0, budget - len(must))])
-    selected = [p for p in pairs if p[0] in need]
-    # Never mirror nothing: a quiet tree still smoke-tests a small slice.
-    return selected or pairs[:10]
+    return [pytest.param(name, fn, oracles.get(name), id=name)
+            for name, fn in sorted(qs.items())]
 
 
-@pytest.mark.parametrize("name,fn,oracle", _pairs(),
-                         ids=[n for n, _, _ in _pairs()])
+@pytest.mark.parametrize("name,fn,oracle", _pairs())
 def test_query_matches_oracle(spark, duck, name, fn, oracle):
     sdf = fn(spark, SF_ORACLE).toPandas()
     if oracle is None:

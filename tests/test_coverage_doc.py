@@ -45,65 +45,3 @@ def test_every_query_has_oracle_or_is_documented_weak():
     m2 = re.search(r"(\d+) of (\d+) have exact\s+DuckDB oracles", text)
     assert m2 and int(m2.group(1)) == len(oracles)
 
-
-# ---------------------------------------------------------------------------
-# changed-since-verified re-check window (workload.__init__)
-# ---------------------------------------------------------------------------
-
-def test_changed_since_verified_mechanics():
-    """The stale-green re-check channel: green rounds parse from the
-    committed CORRECTNESS files, per-query dep files resolve through
-    aliased operator imports, and verified-but-changed queries sort
-    BEFORE stably-verified ones in the driver window."""
-    import localsql_spark.workload as W
-
-    W._ensure_loaded()
-    greens = W._last_green_rounds()
-    # every query registered through round 6 has earned a green row;
-    # later additions are allowed to be pending (they head the window)
-    assert len(set(W.REGISTRY) & set(greens)) >= 193
-
-    # dep resolution: a query that calls operators.similarity through the
-    # `S` alias depends on similarity.py, never on the registry module
-    spec = W.REGISTRY["knn_pq_top5"]
-    ana = W._module_analysis(
-        __import__("pathlib").Path(spec.fn.__code__.co_filename))
-    deps = {p.name for p in W._fn_dep_files(spec.fn, ana)}
-    assert "similarity.py" in deps
-    assert "catalog.py" in deps  # every query's load path
-    import pathlib
-    assert pathlib.Path(W.__file__).resolve() not in \
-        W._fn_dep_files(spec.fn, ana)
-
-    # function-span extraction includes the decorator (= the oracle SQL)
-    src = ana["src"]
-    span = W._fn_span_src(ana["tree"], src, spec.fn.__name__)
-    assert span is not None and "@query(" in span and "def " in span
-
-    # ordering invariant: within the verified set, changed-before-stable
-    changed = W._changed_since_verified()
-    assert set(changed) <= set(W.REGISTRY)
-    assert all(isinstance(ts, int) and ts > 0 for ts in changed.values())
-    order = list(W._ordered())
-    verified = W.DRIVER_VERIFIED | set(greens)
-    positions = {n: i for i, n in enumerate(order)}
-    stable = [n for n in order if n in verified and n not in changed]
-    for n in changed:
-        if n in verified and stable:
-            assert positions[n] < max(positions[s] for s in stable) \
-                or not stable
-
-
-def test_row_is_green_semantics():
-    import localsql_spark.workload as W
-
-    assert W._row_is_green({"rows_match": True, "schema_match": True,
-                            "hash_match": True, "err": None})
-    assert not W._row_is_green({"rows_match": True, "schema_match": True,
-                                "hash_match": False, "err": None})
-    assert W._row_is_green({"rows_match": None, "schema_match": None,
-                            "hash_match": None, "spark_rows": 50,
-                            "err": "no_oracle"})
-    assert not W._row_is_green({"rows_match": None, "schema_match": None,
-                                "hash_match": None, "spark_rows": None,
-                                "err": "no_oracle"})

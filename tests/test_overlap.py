@@ -101,8 +101,7 @@ def test_run_overlapped_results_and_failure_gathering():
     assert res == {"a": "A", "b": "B"}
 
 
-def test_run_overlapped_sequential_fallback(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_STORE_PASS_THREADS", "1")
+def test_run_overlapped_sequential_fallback():
     order: list[str] = []
 
     def mk(name):
@@ -111,5 +110,5 @@ def test_run_overlapped_sequential_fallback(monkeypatch):
             return name
         return fn
 
-    res = run_overlapped([("x", mk("x")), ("y", mk("y"))])
+    res = run_overlapped([("x", mk("x")), ("y", mk("y"))], max_workers=1)
     assert order == ["x", "y"] and res == {"x": "x", "y": "y"}
