@@ -12,11 +12,15 @@ no equivalent here).
 from __future__ import annotations
 
 import re
+import sys
+from functools import partial
 from pathlib import Path
 from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from localsql_spark.sinks.overlap import run_overlapped
 from localsql_spark.sources.readers import COMPRESSORS, SUPPORTED_EXTS, df_from_file
 
 # reference: localsql/localsql.py:41 maps a fixed char list to "_"; widened
@@ -43,9 +47,15 @@ def tablename_from_file(file: str | Path) -> str:
 
 def register_file(spark: SparkSession, file: str | Path, *,
                   format: str | None = None, json_normalize: bool = False,
-                  name: str | None = None) -> tuple[str, DataFrame]:
-    """Load one file and register it as a temp view. Returns (name, df)."""
-    df = df_from_file(spark, file, format=format, json_normalize=json_normalize)
+                  name: str | None = None,
+                  df: DataFrame | None = None) -> tuple[str, DataFrame]:
+    """Load one file and register it as a temp view. Returns (name, df).
+    ``df`` is the file's frame when the caller has already read it (the
+    directory load reads its files concurrently, then registers them in
+    order)."""
+    if df is None:
+        df = df_from_file(spark, file, format=format,
+                          json_normalize=json_normalize)
     table = name or tablename_from_file(file)
     df.createOrReplaceTempView(table)
     return table, df
@@ -75,10 +85,28 @@ def register_directory(spark: SparkSession, directory: str | Path, *,
     isolated and non-fatal (reference: localsql/localsql.py:302-313).
     ``existing`` carries table names already registered by EARLIER loads
     (the engine passes its catalog) so a colliding name uniquifies
-    against those too instead of silently replacing their views."""
+    against those too instead of silently replacing their views.
+
+    The files are read concurrently (:func:`run_overlapped`): each read is
+    a few small Spark jobs (CSV header and schema inference, JSON
+    inference) or driver-side work (xlsx, zip/xz), and one after another
+    they leave the executors idle.  Each read catches its own error.
+    Naming, view registration and the printed lines then follow in
+    discovery order, so they are the same as for a sequential load: a
+    file that failed to read takes no name."""
+    files = discover_files(directory, recursive=recursive)
+
+    def read(f: Path):
+        try:
+            return df_from_file(spark, f, json_normalize=json_normalize)
+        except Exception as e:  # noqa: BLE001 — per-file isolation
+            return e
+
+    read_out = run_overlapped([(str(f), partial(read, f)) for f in files],
+                              spark=spark)
     tables: dict[str, DataFrame] = {}
     taken = set(existing or ())
-    for f in discover_files(directory, recursive=recursive):
+    for f in files:
         try:
             # distinct files can normalize to the same identifier
             # ('report#1.csv' and 'report$1.csv' -> report_1_csv); uniquify
@@ -92,15 +120,17 @@ def register_directory(spark: SparkSession, directory: str | Path, *,
                 if verbose:
                     print(f"{f}: table name {name!r} taken -> {uniq!r}")
                 name = uniq
+            df = read_out[str(f)]
+            if isinstance(df, Exception):
+                raise df
             name, df = register_file(spark, f, json_normalize=json_normalize,
-                                     name=name)
+                                     name=name, df=df)
             tables[name] = df
             if verbose:
                 print(f"{f} -> table {name!r} columns={len(df.columns)}")
         except Exception as e:  # noqa: BLE001 — per-file isolation by design
             # errors go to stderr unconditionally: silent mode protects
             # stdout, not failure visibility
-            import sys
             print(f"{f}: {e}", file=sys.stderr)
     return tables
 
@@ -158,20 +188,25 @@ def register_testdata(spark: SparkSession, sf_dir: str,
                       ) -> dict[str, DataFrame]:
     """Register the driver's parquet tables from an sf directory as views
     (parquet reads memoized per session + directory; view registration
-    always re-applied)."""
+    always re-applied).  On a miss the reads run concurrently
+    (:func:`run_overlapped`): each starts its own schema job."""
     per_session = _TESTDATA_CACHE.setdefault(spark, {})
     key = (str(sf_dir), tuple(tables))
     out = per_session.get(key)
     if out is None:
-        out = {}
-        for t in tables:
-            path = Path(f"{sf_dir}/{t}.parquet")
-            if path.exists():
-                out[t] = spark.read.parquet(str(_normalize_nanos(path)))
+        paths = {t: Path(f"{sf_dir}/{t}.parquet") for t in tables}
+        out = run_overlapped(
+            [(t, lambda p=p: spark.read.parquet(str(_normalize_nanos(p))))
+             for t, p in paths.items() if p.exists()], spark=spark)
         per_session[key] = out
     for t, df in out.items():
         df.createOrReplaceTempView(t)
     return out
+
+
+_DESCR_SCHEMA = pa.schema([("Table", pa.string()), ("Rows", pa.int64()),
+                           ("Columns", pa.int64()), ("Bytes", pa.int64())])
+_DESCR_SAMPLE = 1000
 
 
 def tables_descr(spark: SparkSession, tables: dict[str, DataFrame]) -> DataFrame:
@@ -179,12 +214,22 @@ def tables_descr(spark: SparkSession, tables: dict[str, DataFrame]) -> DataFrame
     localsql/localsql.py:50-54). The reference reports pandas in-memory
     bytes; distributed data has no single resident size, so Bytes here is
     row_count x average UnsafeRow-ish size from a 1000-row sample — an
-    estimate, which is what a catalog stat is for."""
-    rows = []
-    for n, df in sorted(tables.items()):
-        count = df.count()
-        sample = df.limit(1000).collect()
-        avg = (sum(len(str(r)) for r in sample) / len(sample)) if sample else 0
-        rows.append((n, count, len(df.columns), int(count * avg)))
+    estimate, which is what a catalog stat is for.
+
+    The tables are described concurrently (:func:`run_overlapped`).  The
+    sample is taken first, and a table whose sample is not full is
+    counted by it, so ``df.count()`` runs only for tables of 1000 rows or
+    more.  The result is built from an Arrow table: the rows go to the
+    JVM without passing through Python workers."""
+    def stats(name: str) -> dict:
+        df = tables[name]
+        sample = df.limit(_DESCR_SAMPLE).collect()
+        count = df.count() if len(sample) == _DESCR_SAMPLE else len(sample)
+        avg = sum(len(str(r)) for r in sample) / len(sample) if sample else 0
+        return {"Table": name, "Rows": count, "Columns": len(df.columns),
+                "Bytes": int(count * avg)}
+
+    got = run_overlapped([(n, partial(stats, n)) for n in sorted(tables)],
+                         spark=spark)
     return spark.createDataFrame(
-        rows, "Table string, Rows long, Columns long, Bytes long")
+        pa.Table.from_pylist(list(got.values()), schema=_DESCR_SCHEMA))

@@ -262,6 +262,25 @@ def gopher_quality_flags(docs: DataFrame, doc_id_col: str = "doc_id",
 # CCNet-style perplexity bucketing
 # ---------------------------------------------------------------------------
 
+def _nan_last(v: float) -> tuple[bool, float]:
+    """Sort key ordering doubles as Spark does: NaN after every other
+    value (+inf included), NaN equal to NaN."""
+    return (v != v, 0.0 if v != v else v)
+
+
+def _sketch_edges(vals: list[tuple[float, int]],
+                  qs: tuple[float, ...]) -> list[float]:
+    """Bucket edges from collected ``(v, rk)`` sketch rows: the value at
+    0-based index ``floor(q * (n-1))`` in Spark's ``ORDER BY v, rk``
+    order, for each ``q``, sorted ascending."""
+    import math
+
+    vals = sorted(vals, key=lambda t: (_nan_last(t[0]), t[1]))
+    n = len(vals)
+    return sorted((vals[int(math.floor(q * (n - 1)))][0] for q in qs),
+                  key=_nan_last) if n else []
+
+
 def perplexity_buckets(docs: DataFrame, doc_id_col: str = "doc_id",
                        text_col: str = "text",
                        labels: tuple[str, ...] = ("head", "middle", "tail"),
@@ -283,6 +302,10 @@ def perplexity_buckets(docs: DataFrame, doc_id_col: str = "doc_id",
     scored stream and nothing materializes beyond the k-row sketch.
     Values equal to an edge land in the lower bucket (strict ``v > e``),
     deterministic on both engines.
+
+    Eager: building the frame collects the sketch (one Spark job over the
+    scored corpus), so the bucket edges are fixed when this function
+    returns, not when the result is executed.
 
     Output: ``(doc_id, ppl, bucket, ccnet_bucket)``.
     """
@@ -308,17 +331,14 @@ def perplexity_buckets(docs: DataFrame, doc_id_col: str = "doc_id",
     # subtree of quantile_estimates collapses to one TakeOrdered collect
     # and a literal edges array.  The selection reproduces the in-plan
     # arithmetic exactly: (v, rk) sort (Spark normalizes -0.0 == 0.0 in
-    # sort keys, as Python tuple sort does), 0-based index
+    # sort keys, as Python tuple sort does, and orders NaN last, which
+    # _sketch_edges' key reproduces), 0-based index
     # floor(q * (n-1)) in IEEE double, edges sorted ascending; the
     # strict ppl > e bucket rule is order-insensitive over the edges.
     # quantile_estimates stays the in-plan reference (sketch_quantiles'
     # RESULT is those estimates, so its plan is unchanged).
-    import math
-
-    vals = sorted((r["v"], r["rk"]) for r in sketch.collect())
-    n = len(vals)
-    edge_vals = (sorted(vals[int(math.floor(q * (n - 1)))][0] for q in qs)
-                 if n else [])
+    edge_vals = _sketch_edges([(r["v"], r["rk"]) for r in sketch.collect()],
+                              qs)
     edges_arr = (F.array(*[F.lit(float(e)) for e in edge_vals])
                  if edge_vals else F.expr("CAST(array() AS array<double>)"))
     bucket = F.aggregate(

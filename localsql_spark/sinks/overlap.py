@@ -1,18 +1,22 @@
-"""Driver-side job overlap for the composed store passes (optimization
-guide §2.6, "Overlap independent jobs"): a composed maintenance/erase
-pass over N independent stores is N short chains of small Spark jobs,
-and running them sequentially leaves the cluster idle through every
-chain's tail and serializes N chains' worth of driver-side planning and
-file commits.  Spark's scheduler happily runs several jobs at once
-inside one application — actions are only sequential because the driver
-calls them sequentially — so the passes submit their independent
-per-store chains from a small thread pool and let FIFO scheduling
-back-fill the executors.
+"""Driver-side overlap of independent Spark jobs (optimization guide
+§2.6, "Overlap independent jobs").  Spark's scheduler happily runs
+several jobs at once inside one application — actions are only
+sequential because the driver calls them sequentially — so callers with
+N independent short chains of small jobs submit them from a small thread
+pool and let FIFO scheduling back-fill the executors instead of leaving
+them idle through every chain's tail.
 
-Each worker enrolls as a delegate of the farm locks the composed pass
-already holds (:func:`localsql_spark.sinks.locks.delegated_locks`), so
-the per-store fold entry points' ``locked_by`` re-acquires stay
-reentrant without weakening the sibling-thread Busy contract.
+Two kinds of callers use it:
+
+- the composed store passes (maintenance/erase over N stores): each
+  worker enrolls as a delegate of the farm locks the composed pass
+  already holds (:func:`localsql_spark.sinks.locks.delegated_locks`), so
+  the per-store fold entry points' ``locked_by`` re-acquires stay
+  reentrant without weakening the sibling-thread Busy contract;
+- the catalog (:mod:`localsql_spark.catalog`): the per-file reads of a
+  directory load, the per-table stats of ``\\td`` and the parquet reads
+  of ``register_testdata``, each a few schema-inference, count or
+  sample jobs.
 
 Pool width is driver-orchestration width, not a data-scale knob: 2-4
 chains in flight is enough to fill a stage tail at any cluster size
@@ -37,7 +41,8 @@ def run_overlapped(tasks: list[tuple[str, Callable[[], Any]]],
     All tasks run to completion even when one fails (the per-store
     passes are idempotent and a half-run farm pass heals on the next
     run, exactly as with the sequential form's earlier-stores-finished
-    partial failure); the first failure is re-raised afterwards.
+    partial failure); the first failure in task order is re-raised
+    afterwards.  Results come back in task order.
     """
     if len(tasks) <= 1 or max_workers <= 1:
         return {k: fn() for k, fn in tasks}
@@ -56,7 +61,7 @@ def run_overlapped(tasks: list[tuple[str, Callable[[], Any]]],
     results: dict[str, Any] = {}
     errors: list[tuple[str, BaseException]] = []
     with ThreadPoolExecutor(max_workers=min(max_workers, len(tasks)),
-                            thread_name_prefix="store-pass") as pool:
+                            thread_name_prefix="overlap") as pool:
         futs = [(k, pool.submit(_itt(fn))) for k, fn in tasks]
         for k, fut in futs:
             try:

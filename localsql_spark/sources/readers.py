@@ -30,6 +30,7 @@ import bz2
 import gzip
 import lzma
 import tempfile
+import threading
 import zipfile
 from pathlib import Path
 
@@ -54,13 +55,15 @@ def sniff_format(file: str | Path) -> tuple[str | None, str | None]:
     return fmt, None
 
 
-_TEMPFILES: list[str] = []
+# (resolved path, st_size, st_mtime_ns) -> decompressed temp copy
+_TEMPFILES: dict[tuple[str, int, int], str] = {}
+_TEMPFILES_LOCK = threading.Lock()
 
 
 def _cleanup_tempfiles() -> None:
     import os
 
-    for f in _TEMPFILES:
+    for f in _TEMPFILES.values():
         try:
             os.unlink(f)
         except OSError:
@@ -75,7 +78,21 @@ atexit.register(_cleanup_tempfiles)
 def _decompress_to_temp(file: Path, comp: str) -> Path:
     """Driver-side decompression for codecs Spark can't stream (zip/xz).
     Spark reads lazily, so the temp file must outlive this call; it is
-    removed at interpreter exit."""
+    removed at interpreter exit.  One copy serves every load of the same
+    file version (path, size and mtime); the lock makes concurrent loads
+    of one file share it rather than race."""
+    st = file.stat()
+    key = (str(file.resolve()), st.st_size, st.st_mtime_ns)
+    with _TEMPFILES_LOCK:
+        cached = _TEMPFILES.get(key)
+        if cached is not None and Path(cached).exists():
+            return Path(cached)
+        tmp_path = _decompress(file, comp)
+        _TEMPFILES[key] = tmp_path
+        return Path(tmp_path)
+
+
+def _decompress(file: Path, comp: str) -> str:
     openers = {"gz": gzip.open, "bz2": bz2.open, "xz": lzma.open}
     suffix = "".join(Path(file).suffixes[:-1]) or ".dat"
     tmp = tempfile.NamedTemporaryFile(suffix=suffix, delete=False)
@@ -96,8 +113,7 @@ def _decompress_to_temp(file: Path, comp: str) -> Path:
         with openers[comp](file, "rb") as f:
             tmp.write(f.read())
     tmp.close()
-    _TEMPFILES.append(tmp.name)
-    return Path(tmp.name)
+    return tmp.name
 
 
 def read_csv(spark: SparkSession, path: str | Path, sep: str = ",") -> DataFrame:

@@ -554,3 +554,127 @@ def test_xml_source_and_sink_roundtrip(spark, tmp_path):
     back = sorted((r.id, r.name)
                   for r in read_xml(spark, out).collect())
     assert back == got
+
+
+def test_register_directory_overlapped_reads_keep_sequential_naming(
+        spark, tmp_path, capsys):
+    """Reads run concurrently, but names, printed lines and their order
+    are those of a load that reads one file after another: a file that
+    fails to read (corrupt JSONL) takes no name, so the next colliding
+    file gets the suffix the failed one would have had."""
+    from localsql_spark.catalog import register_directory
+
+    (tmp_path / "c#1.csv").write_text("a\n1\n")
+    (tmp_path / "c$1.csv").write_text("b\n2\n")
+    (tmp_path / "r#1.jsonl").write_text('{"x": 1}\n')
+    (tmp_path / "r$1.jsonl").write_text('{"y": 1}\n{"y": 2\n')  # corrupt
+    (tmp_path / "r%1.jsonl").write_text('{"z": 1}\n')
+    tables = register_directory(spark, tmp_path, verbose=True)
+    out, err = capsys.readouterr()
+
+    assert {n: df.columns for n, df in tables.items()} == {
+        "c_1_csv": ["a"], "c_1_csv_2": ["b"],
+        "r_1_jsonl": ["x"], "r_1_jsonl_2": ["z"]}
+    d = tmp_path
+    assert out.splitlines() == [
+        f"{d}/c#1.csv -> table 'c_1_csv' columns=1",
+        f"{d}/c$1.csv: table name 'c_1_csv' taken -> 'c_1_csv_2'",
+        f"{d}/c$1.csv -> table 'c_1_csv_2' columns=1",
+        f"{d}/r#1.jsonl -> table 'r_1_jsonl' columns=1",
+        f"{d}/r$1.jsonl: table name 'r_1_jsonl' taken -> 'r_1_jsonl_2'",
+        f"{d}/r%1.jsonl: table name 'r_1_jsonl' taken -> 'r_1_jsonl_2'",
+        f"{d}/r%1.jsonl -> table 'r_1_jsonl_2' columns=1"]
+    bad = [line for line in err.splitlines() if line.startswith(str(d))]
+    assert len(bad) == 1
+    assert bad[0].startswith(f"{d}/r$1.jsonl: ")
+    assert "malformed JSONL" in bad[0]
+
+
+def test_td_rows_exact_below_and_above_the_sample(spark):
+    """\\td counts a table under 1000 rows by its sample and a larger one
+    with count(); both give exact Rows, and Bytes is count x the average
+    sampled row width."""
+    from localsql_spark.catalog import tables_descr
+
+    small = spark.createDataFrame([(i, f"s{i}") for i in range(3)],
+                                  "id long, s string")
+    big = spark.range(1500).selectExpr("id", "id * 2 AS twice")
+    got = {r["Table"]: tuple(r) for r in
+           tables_descr(spark, {"small": small, "big": big}).collect()}
+
+    def expect(name, df):
+        count = df.count()
+        sample = df.limit(1000).collect()
+        avg = sum(len(str(r)) for r in sample) / len(sample)
+        return (name, count, len(df.columns), int(count * avg))
+
+    assert got == {"small": expect("small", small), "big": expect("big", big)}
+    assert got["small"][1] == 3 and got["big"][1] == 1500
+
+
+def test_td_on_empty_catalog(spark):
+    from localsql_spark.catalog import tables_descr
+
+    df = tables_descr(spark, {})
+    assert df.collect() == []
+    assert df.schema.simpleString() == (
+        "struct<Table:string,Rows:bigint,Columns:bigint,Bytes:bigint>")
+
+
+def test_decompressed_copy_reused_per_file_version(spark, tmp_path):
+    """Loading the same .csv.zip twice reuses one temp copy; a touched file
+    (new mtime) gets a new one."""
+    import os
+
+    from localsql_spark.sources import readers
+
+    zp = tmp_path / "t.csv.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("t.csv", "a,b\n1,2\n3,4\n")
+
+    def copies():
+        return [v for k, v in readers._TEMPFILES.items()
+                if k[0] == str(zp.resolve())]
+
+    assert df_from_file(spark, zp).count() == 2
+    assert df_from_file(spark, zp).count() == 2
+    assert len(copies()) == 1
+    st = zp.stat()
+    os.utime(zp, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert df_from_file(spark, zp).count() == 2
+    assert len(set(copies())) == 2
+
+
+def test_concurrent_decompression_shares_one_copy(tmp_path):
+    """Concurrent loads of one .csv.zip (a directory load reads its files
+    from several threads) make one temp copy between them."""
+    import sys
+    import threading
+
+    from localsql_spark.sources import readers
+
+    zp = tmp_path / "c.csv.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("c.csv", "a\n" + "1\n" * 200000)
+    got, errors = [], []
+
+    def load():
+        try:
+            got.append(readers._decompress_to_temp(zp, "zip"))
+        except Exception as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=load) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and len(got) == 16 and len(set(got)) == 1
+    assert len({v for k, v in readers._TEMPFILES.items()
+                if k[0] == str(zp.resolve())}) == 1

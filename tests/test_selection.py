@@ -451,3 +451,27 @@ def test_ccnet_by_lang_thresholds_are_language_relative(spark):
     # a language-fair tercile would put ~20 of 60 in tail; the global
     # cut roughly doubles that (measured 38) — the skew the variant fixes
     assert xx_tail >= 30
+
+
+def test_sketch_edges_order_nan_last_like_spark(spark):
+    """A NaN perplexity must not scramble the bucket edges: the driver-side
+    edge pick sorts as Spark's ORDER BY v, rk does (NaN after +inf)."""
+    import math
+
+    from localsql_spark.operators.selection import _sketch_edges
+
+    nan, inf = float("nan"), float("inf")
+    rows = [(3.0, 7), (nan, 2), (1.0, 9), (nan, 1), (inf, 4), (-0.0, 5),
+            (0.0, 3), (2.5, 8), (nan, 6), (-1.0, 0), (2.5, 1)]
+    qs = (0.1, 1 / 3, 0.5, 2 / 3, 0.9, 1.0)
+    ordered = [tuple(r) for r in spark.createDataFrame(
+        rows, "v double, rk long").orderBy("v", "rk").collect()]
+    n = len(ordered)
+    want = [ordered[int(math.floor(q * (n - 1)))][0] for q in qs]
+    got = _sketch_edges(rows, qs)
+
+    def key(v):
+        return (math.isnan(v), 0.0 if math.isnan(v) else v)
+
+    assert [key(v) for v in got] == sorted(key(v) for v in want)
+    assert math.isnan(got[-1]) and not math.isnan(got[0])
