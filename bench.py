@@ -310,8 +310,8 @@ def main() -> None:
     warm_txt = F.concat_ws(" ", *[F.concat(F.lit(f"w{i}"), (F.col("id") % 7)
                                            .cast("string"))
                                   for i in range(12)])
-    (spark.range(0, 64).select(minhash_signature(warm_txt).alias("sig"),
-                               simhash32(warm_txt).alias("sh"))
+    (spark.range(0, 64).select(warm_txt.alias("t"))
+     .select(minhash_signature("t").alias("sig"), simhash32("t").alias("sh"))
      .agg(F.max("sh"), F.max(F.element_at("sig", 1))).collect())
 
     from localsql_spark.operators import cleanup as _op_cleanup

@@ -129,6 +129,7 @@ class LocalSparkSQL:
         (no per-column jobs; reference: localsql/localsql.py:226-228)."""
         from pyspark.sql import functions as F  # noqa: N812
 
+        from localsql_spark.operators.text import sql_ident
         df = self.tables[name]
         df.printSchema()
         # backtick-quote column references: flattened-JSON tables carry
@@ -140,7 +141,7 @@ class LocalSparkSQL:
             rows_alias += "_"
         stats = df.agg(
             F.count(F.lit(1)).alias(rows_alias),
-            *[F.count(F.col("`" + c.replace("`", "``") + "`")).alias(c)
+            *[F.count(F.col(sql_ident(c))).alias(c)
               for c in df.columns]).collect()[0]
         print(f"{stats[rows_alias]} entries, {len(df.columns)} columns")
         for c in df.columns:
@@ -313,7 +314,7 @@ class LocalSparkSQL:
             raise RuntimeError(
                 "usage: \\quality <table> [text= id=] [AS <view>]")
         df = self._table(pos[0])
-        text = F.col(opts.get("text", "text"))
+        text = opts.get("text", "text")
         id_col = opts.get("id", "doc_id")
         out = df.select(
             F.col(id_col),

@@ -5,7 +5,10 @@ localsql/localsql.py:230); these are the scale extensions a training-data
 pipeline needs.  Design points for 100 TB:
 
 - All per-document work (shingling, hashing, signatures) is row-local
-  ``pyspark.sql.functions`` expressions — no Python UDFs, no shuffle.
+  SQL expressions — no Python UDFs, no shuffle.  Each one is rendered as
+  SQL text (cached per argument tuple) and built with ONE ``F.expr``, so a
+  signature costs a few py4j round-trips to build, not one or more per
+  node of its expression tree (``operators.text.sql_builder``).
 - The only shuffles are the ones the algorithms require: one groupBy on the
   content hash (exact), one band-bucket self-join (MinHash-LSH: O(docs×bands)
   rows, not O(docs²)), one shingle-inverted-index join (Jaccard).
@@ -21,14 +24,14 @@ exact same signatures — no engine-specific hash functions.
 from __future__ import annotations
 
 import functools
-import operator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from localsql_spark.operators import spread, track_persist
 from localsql_spark.sinks.locks import locked_by
-from localsql_spark.operators.text import normalize_text, word_shingles
+from localsql_spark.operators.text import (norm_sql, normalize_text,
+                                          sql_builder, word_shingles)
 
 N_MINHASH = 16
 N_BANDS = 4  # 4 bands x 4 rows: catches jaccard >~ 0.5 with high prob
@@ -49,7 +52,8 @@ def minhash_b(j: int) -> int:
     return (2654435761 * (j + 1) + 1013904223) % MINHASH_P
 
 
-def minhash_signature(text: Column, n: int = N_MINHASH) -> Column:
+@sql_builder
+def minhash_signature(x: str, n: int = N_MINHASH) -> str:
     """array<long> of n minhash components over distinct 3-word shingles.
 
     Performance shape: the shingle array is materialized once and folded in a
@@ -57,28 +61,17 @@ def minhash_signature(text: Column, n: int = N_MINHASH) -> Column:
     multiply-mods, NOT n passes over the text.  (The naive per-component
     formulation re-evaluates the whole normalize+shingle pipeline n times;
     Catalyst does not share subexpressions across aggregate expressions, which
-    cost ~26x wall time at sf0.1.)
-    """
-    shingles = word_shingles(text, 3)
-    hs = F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
-        % MINHASH_P)
-    init = F.array_repeat(F.lit(MINHASH_P).cast("long"), n)
-    # the (a_j, b_j) constants ride as ONE literal struct array parsed
-    # JVM-side: building the n-expression candidate array per call cost
-    # ~0.25s of DRIVER py4j round-trips (r15 profile of the incremental
-    # probe; same lesson as the r14 JL sign-matrix literal), repeated by
-    # every signature-computing query
-    ab = F.expr("array(" + ",".join(
-        f"struct({minhash_a(j)}L as a, {minhash_b(j)}L as b)"
-        for j in range(n)) + ")")
-
-    def fold(acc: Column, h: Column) -> Column:
-        cand = F.transform(ab, lambda p: (h * p["a"] + p["b"]) % MINHASH_P)
-        return F.zip_with(acc, cand, lambda a, c: F.least(a, c))
-
-    return F.aggregate(hs, init, fold)
+    cost ~26x wall time at sf0.1.)  The (a_j, b_j) constants ride as ONE
+    literal struct array."""
+    hs = (f"transform({word_shingles.sql(x, 3)}, s -> "
+          f"CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
+          f" % {MINHASH_P})")
+    ab = "array(" + ", ".join(
+        f"struct({minhash_a(j)}L AS a, {minhash_b(j)}L AS b)"
+        for j in range(n)) + ")"
+    return (f"aggregate({hs}, array_repeat(CAST({MINHASH_P} AS BIGINT), {n}),"
+            f" (acc, h) -> zip_with(acc, transform({ab},"
+            f" p -> (h * p.a + p.b) % {MINHASH_P}), (a, c) -> least(a, c)))")
 
 
 def band_keys(sig_df: DataFrame, n: int = N_MINHASH,
@@ -87,14 +80,27 @@ def band_keys(sig_df: DataFrame, n: int = N_MINHASH,
     signature table, plus every other column of ``sig_df`` passed through:
     one md5 band key per ``n/bands`` consecutive signature components —
     the unit every LSH bucket join here collides on."""
-    rows = n // bands
-    band_arr = F.array(*[
-        F.md5(F.concat_ws("|", *[F.element_at("sig", b * rows + r + 1)
-                                 for r in range(rows)]))
-        for b in range(bands)])
     other = [c for c in sig_df.columns if c not in ("doc_id", "sig")]
     return sig_df.select("doc_id", *other,
-                         F.posexplode(band_arr).alias("band_id", "band_key"))
+                         F.expr(_band_keys_sql(n, bands)))
+
+
+@functools.lru_cache(maxsize=64)
+def _band_keys_sql(n: int, bands: int) -> str:
+    rows = n // bands
+    return "posexplode(array(" + ", ".join(
+        "md5(concat_ws('|', " + ", ".join(
+            f"element_at(sig, {b * rows + r + 1})" for r in range(rows))
+        + "))" for b in range(bands)) + ")) AS (band_id, band_key)"
+
+
+@functools.lru_cache(maxsize=64)
+def _est_jaccard(n: int) -> str:
+    """Fraction of equal components of the signature columns ``sig_a`` and
+    ``sig_b`` (SQL text), aliased ``est_jaccard``."""
+    return "CAST((" + " + ".join(
+        f"CAST(element_at(sig_a, {j}) = element_at(sig_b, {j}) AS INT)"
+        for j in range(1, n + 1)) + f") AS DOUBLE) / {n} AS est_jaccard"
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -194,45 +200,32 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
     pairsig = pairs.join(sa, "doc_a").join(sb, "doc_b")
-    matches = functools.reduce(operator.add, [
-        (F.element_at("sig_a", j + 1) == F.element_at("sig_b", j + 1)).cast("int")
-        for j in range(n)])
-    return (pairsig
-            .select("doc_a", "doc_b",
-                    (matches.cast("double") / n).alias("est_jaccard"))
+    return (pairsig.select("doc_a", "doc_b", F.expr(_est_jaccard(n)))
             .filter(F.col("est_jaccard") >= threshold))
 
 
-def simhash32(text: Column) -> Column:
+@sql_builder
+def simhash32(x: str) -> str:
     """32-bit SimHash over distinct words: bit i is the sign of the sum of
     (+1/-1) votes from each token's md5-derived 32-bit hash.  Row-local.
 
     Single ``aggregate`` fold carrying all 32 vote counters — one md5 per
     token (32 separate vote aggregates would re-evaluate the token-hash
-    array per bit; see minhash_signature for the same pitfall)."""
-    toks = F.array_distinct(F.split(normalize_text(text), " "))
-    hashes = F.transform(
-        toks, lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long"))
-    init = F.array_repeat(F.lit(0), 32)
-
-    def fold(acc: Column, h: Column) -> Column:
-        votes = F.array(*[
-            F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)
-            for i in range(32)])
-        return F.zip_with(acc, votes, lambda a, v: a + v)
-
-    def pack(acc: Column) -> Column:
-        # acc is the BOUND accumulator variable — evaluated once, so the 32
-        # element_at references are cheap (vs. referencing the whole fold
-        # expression 32 times, which would re-inline it per bit)
-        out = F.lit(0).cast("long")
-        for i in range(32):
-            out = out + F.when(F.element_at(acc, i + 1) > 0,
-                               F.lit(1 << i).cast("long")).otherwise(
-                                   F.lit(0).cast("long"))
-        return out
-
-    return F.aggregate(hashes, init, fold, pack)
+    array per bit; see minhash_signature for the same pitfall).  The
+    finish lambda packs the BOUND accumulator variable — evaluated once,
+    so its 32 element_at references are cheap (vs. referencing the whole
+    fold expression 32 times, which would re-inline it per bit)."""
+    hashes = (f"transform(array_distinct(split({norm_sql(x)}, ' ')), t -> "
+              f"CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT))")
+    votes = "array(" + ", ".join(
+        f"CASE WHEN (h & {1 << i}) != 0 THEN 1 ELSE -1 END"
+        for i in range(32)) + ")"
+    pack = "CAST(0 AS BIGINT) + " + " + ".join(
+        f"CASE WHEN element_at(acc, {i + 1}) > 0 THEN CAST({1 << i} AS BIGINT)"
+        f" ELSE CAST(0 AS BIGINT) END" for i in range(32))
+    return (f"aggregate({hashes}, array_repeat(0, 32),"
+            f" (acc, h) -> zip_with(acc, {votes}, (a, v) -> a + v),"
+            f" acc -> {pack})")
 
 
 def simhash_near_pairs(df: DataFrame, text_col: str = "text",
@@ -257,12 +250,12 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
     sh = track_persist(
         spread(df)
         .select(F.col(id_col).alias("doc_id"),
-                simhash32(F.col(text_col)).alias("simhash")))
+                simhash32(text_col).alias("simhash")))
     bands = sh.select(
         "doc_id", "simhash",
-        F.posexplode(F.array(*[
-            F.shiftright("simhash", 8 * b).bitwiseAND(255)
-            for b in range(4)])).alias("b", "byte"))
+        F.expr("posexplode(array(" + ", ".join(
+            f"shiftright(simhash, {8 * b}) & 255" for b in range(4))
+            + ")) AS (b, byte)"))
     a = bands.select(F.col("doc_id").alias("doc_a"),
                      F.col("simhash").alias("ha"), "b", "byte")
     b = bands.select(F.col("doc_id").alias("doc_b"),
@@ -291,7 +284,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
 
     sh = spread(df).select(F.col(id_col).alias("doc_id"),
                            F.col(block_col).alias("blk"),
-                           F.explode(word_shingles(F.col(text_col), 3))
+                           F.explode(word_shingles(text_col, 3))
                            .alias("s"))
     if df_cap is not None:
         # document frequency as a per-shingle window count ((doc_id, s) is
@@ -562,7 +555,7 @@ def compute_signatures(df: DataFrame, text_col: str = "text",
     LSH variant here joins on and the schema the signature store persists."""
     return spread(df).select(
         F.col(id_col).alias("doc_id"),
-        minhash_signature(F.col(text_col), n).alias("sig"))
+        minhash_signature(text_col, n).alias("sig"))
 
 
 @locked_by("path")
@@ -837,13 +830,7 @@ def minhash_lsh_pairs_from_banded_index(
     sb = sig_all.select(F.col("doc_id").alias("doc_b"),
                         F.col("sig").alias("sig_b"))
     pairsig = pairs.join(sa, "doc_a").join(sb, "doc_b")
-    matches = functools.reduce(operator.add, [
-        (F.element_at("sig_a", j + 1)
-         == F.element_at("sig_b", j + 1)).cast("int")
-        for j in range(n)])
-    return (pairsig
-            .select("doc_a", "doc_b",
-                    (matches.cast("double") / n).alias("est_jaccard"))
+    return (pairsig.select("doc_a", "doc_b", F.expr(_est_jaccard(n)))
             .filter(F.col("est_jaccard") >= threshold))
 
 
@@ -1179,13 +1166,7 @@ def pairs_touching_new(sig_corpus: DataFrame, sig_new: DataFrame,
     sb = sig_all.select(F.col("doc_id").alias("doc_b"),
                         F.col("sig").alias("sig_b"))
     pairsig = pairs.join(sa, "doc_a").join(sb, "doc_b")
-    matches = functools.reduce(operator.add, [
-        (F.element_at("sig_a", j + 1)
-         == F.element_at("sig_b", j + 1)).cast("int")
-        for j in range(n)])
-    return (pairsig
-            .select("doc_a", "doc_b",
-                    (matches.cast("double") / n).alias("est_jaccard"))
+    return (pairsig.select("doc_a", "doc_b", F.expr(_est_jaccard(n)))
             .filter(F.col("est_jaccard") >= threshold))
 
 
@@ -1210,7 +1191,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
 
     sh = spread(df).select(F.col(id_col).alias("doc_id"),
                            F.col(block_col).alias("blk"),
-                           F.explode(word_shingles(F.col(text_col), 3))
+                           F.explode(word_shingles(text_col, 3))
                            .alias("s"))
     if df_cap is not None:
         sh = (sh.withColumn("df", F.count(F.lit(1))

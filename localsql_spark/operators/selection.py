@@ -366,7 +366,7 @@ def decontaminate_exact(docs: DataFrame, eval_mod: int = 50,
 
     sh = (spread(docs)
           .select("doc_id",
-                  F.explode(T.word_shingles(F.col("text"), k)).alias("s"),
+                  F.explode(T.word_shingles("text", k)).alias("s"),
                   (F.col("doc_id") % eval_mod == 0).alias("is_eval")))
     in_eval = F.max(F.col("is_eval").cast("int")).over(
         Window.partitionBy("s"))
@@ -400,7 +400,7 @@ def decontaminate_bloom(docs: DataFrame, eval_mod: int = 50, k: int = 3,
     sh = track_persist(
         spread(docs)
         .select("doc_id",
-                F.explode(T.word_shingles(F.col("text"), k)).alias("s"),
+                F.explode(T.word_shingles("text", k)).alias("s"),
                 (F.col("doc_id") % eval_mod == 0).alias("is_eval")))
     eval_sh = sh.filter("is_eval").select("s").distinct()
     train_sh = sh.filter(~F.col("is_eval")).select("doc_id", "s")

@@ -1035,8 +1035,7 @@ def _grouped_dim_means(src: DataFrame, keys: list[str]) -> DataFrame:
                 continue
             # dropna=False: a NULL key is a real group to the relational
             # groupBy and must stay one here
-            for cl, idxs in pdf.groupby(keys, sort=False,
-                                        dropna=False).indices.items():
+            for cl, sub in pdf.groupby(keys, sort=False, dropna=False):
                 if not isinstance(cl, tuple):
                     cl = (cl,)
                 if cl not in sums:
@@ -1044,7 +1043,7 @@ def _grouped_dim_means(src: DataFrame, keys: list[str]) -> DataFrame:
                     oks[cl] = np.zeros(0, dtype=np.int64)
                     cnts[cl] = np.zeros(0, dtype=np.int64)
                 by_len: dict[int, list] = {}
-                for v in pdf["_v"].iloc[idxs]:
+                for v in sub["_v"]:
                     if v is None:
                         continue  # posexplode(NULL) emits no rows
                     try:

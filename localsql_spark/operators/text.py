@@ -3,13 +3,20 @@ language-ID (stopword heuristic), quality scoring, token counting, document
 fingerprinting.
 
 These go beyond the reference (which has no text operators; its whole text
-surface is SQLite string functions via localsql/localsql.py:230) and are
-built as pure ``pyspark.sql.functions`` column expressions — JVM-side,
-whole-stage-codegen-able, no Python in the hot path, so they scan-scale
-linearly to 100 TB with zero shuffles (all row-local).
+surface is SQLite string functions via localsql/localsql.py:230).  The
+per-document builders (``langid``, ``quality_score``, ``word_shingles`` and
+the ratios they are made of) take a column NAME and render their whole
+expression as SQL text — a pure-Python string cached per argument tuple —
+returned as ONE ``F.expr``: the JVM parses it in a single call, where
+composing the same tree from ``pyspark.sql.functions`` calls cost one or
+more round-trips per node (thousands per ``\\quality``).  They stay
+JVM-side, whole-stage-codegen-able expressions, no Python in the hot path,
+so they scan-scale linearly to 100 TB with zero shuffles (all row-local).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,37 +35,79 @@ PUNCT_RE = r"[.,;:!?'\"()\[\]{}-]"
 WORD_RE = r"[a-z0-9]+"
 
 
-def _padded(text: Column) -> Column:
-    return F.concat(F.lit(" "), F.lower(text), F.lit(" "))
+# ---------------------------------------------------------------------------
+# SQL-text rendering
+# ---------------------------------------------------------------------------
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: backslash and single quote
+    escaped, so regex classes such as :data:`PUNCT_RE` survive the
+    parser's unescaping unchanged."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def lang_score(text: Column, lang: str) -> Column:
+def sql_ident(name: str) -> str:
+    """A column name as ONE backticked identifier (backticks doubled), so
+    a flattened-JSON column such as ``nest.a`` is not read as a struct
+    path."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_WS = sql_str(r"\s+")
+
+
+def norm_sql(x: str) -> str:
+    """SQL form of :func:`normalize_text` over the SQL expression ``x``."""
+    return f"trim(regexp_replace(lower({x}), {_WS}, ' '))"
+
+
+def sql_builder(render):
+    """Turn ``render(x, *args) -> SQL text`` (``x`` an SQL expression)
+    into the public builder ``f(col, *args) -> Column`` over a column
+    NAME: the name is quoted once, the text is cached per argument tuple
+    and parsed JVM-side as one ``F.expr``.  ``f.sql`` is the cached
+    renderer, for composing one builder's text into another's."""
+    cached = functools.lru_cache(maxsize=256)(render)
+
+    @functools.wraps(render)
+    def build(col: str, *args, **kwargs) -> Column:
+        return F.expr(cached(sql_ident(col), *args, **kwargs))
+
+    build.sql = cached
+    return build
+
+
+@sql_builder
+def lang_score(x: str, lang: str) -> str:
     """Number of the language's stopwords present in the text (0..5)."""
-    padded = _padded(text)
-    score = F.lit(0)
-    for w in LANG_STOPWORDS[lang]:
-        score = score + padded.contains(f" {w} ").cast("int")
-    return score
+    padded = f"concat(' ', lower({x}), ' ')"
+    return "(" + " + ".join(
+        f"CAST(contains({padded}, ' {w} ') AS INT)"
+        for w in LANG_STOPWORDS[lang]) + ")"
 
 
-def langid(text: Column) -> Column:
+@sql_builder
+def langid(x: str) -> str:
     """Predicted language = argmax stopword score, ties broken by the fixed
-    key order of LANG_STOPWORDS; 'und' when no stopword matches."""
-    langs = list(LANG_STOPWORDS)
-    scores = {lang: lang_score(text, lang) for lang in langs}
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
-    for lang in reversed(langs):  # reversed so earlier langs win ties
-        expr = F.when((scores[lang] == best) & (best > 0), lang).otherwise(expr)
-    return expr
+    key order of LANG_STOPWORDS (``array_position`` finds the FIRST
+    maximum); 'und' when no stopword matches or the text is NULL.  Each
+    score appears three times in the text; a ``WHEN score = greatest(...)``
+    branch per language repeated all five scores in every branch, four
+    times the tree to analyze and evaluate."""
+    scores = ", ".join(lang_score.sql(x, lang) for lang in LANG_STOPWORDS)
+    langs = ", ".join(f"'{lang}'" for lang in LANG_STOPWORDS)
+    return (f"coalesce(CASE WHEN greatest({scores}) > 0 THEN element_at("
+            f"array({langs}), CAST(array_position(array({scores}), "
+            f"greatest({scores})) AS INT)) END, 'und')")
 
 
-def token_count_ws(text: Column) -> Column:
+@sql_builder
+def token_count_ws(x: str) -> str:
     """Whitespace token count.  Empty/whitespace-only text is 0 tokens —
     ``split('')`` yields one empty element and would count 1 (the oracle SQL
     carries the same guard)."""
-    return F.when(F.length(F.trim(text)) == 0, F.lit(0))\
-        .otherwise(F.size(F.split(F.trim(text), r"\s+"))).cast("long")
+    return (f"CAST(CASE WHEN length(trim({x})) = 0 THEN 0 "
+            f"ELSE size(split(trim({x}), {_WS})) END AS BIGINT)")
 
 
 def token_count_words(text: Column) -> Column:
@@ -66,48 +115,63 @@ def token_count_words(text: Column) -> Column:
     return F.regexp_count(F.lower(text), F.lit(WORD_RE)).cast("long")
 
 
-def punct_ratio(text: Column) -> Column:
+def _ratio_sql(x: str, pattern: str) -> str:
     # nullif guard: '' has length 0 and ANSI mode raises on x/0
-    return (F.regexp_count(text, F.lit(PUNCT_RE)).cast("double")
-            / F.nullif(F.length(text), F.lit(0)))
+    return (f"(CAST(regexp_count({x}, {sql_str(pattern)}) AS DOUBLE)"
+            f" / nullif(length({x}), 0))")
 
 
-def digit_ratio(text: Column) -> Column:
-    return (F.regexp_count(text, F.lit("[0-9]")).cast("double")
-            / F.nullif(F.length(text), F.lit(0)))
+@sql_builder
+def punct_ratio(x: str) -> str:
+    return _ratio_sql(x, PUNCT_RE)
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
+@sql_builder
+def digit_ratio(x: str) -> str:
+    return _ratio_sql(x, "[0-9]")
+
+
+def _lower_tokens_sql(x: str) -> str:
+    return f"split(lower(trim({x})), {_WS})"
+
+
+@sql_builder
+def stopword_ratio(x: str, lang: str = "en") -> str:
     """Fraction of whitespace tokens that are the language's stopwords."""
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    stops = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
-    return n_stop.cast("double") / F.nullif(token_count_ws(text), F.lit(0))
+    stops = "array(" + ", ".join(map(sql_str, LANG_STOPWORDS[lang])) + ")"
+    return (f"(CAST(size(filter({_lower_tokens_sql(x)}, "
+            f"t -> array_contains({stops}, t))) AS DOUBLE)"
+            f" / nullif({token_count_ws.sql(x)}, 0))")
 
 
-def avg_word_len(text: Column) -> Column:
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total.cast("double") / F.size(toks)
+@sql_builder
+def avg_word_len(x: str) -> str:
+    toks = _lower_tokens_sql(x)
+    return (f"(CAST(aggregate({toks}, 0, (acc, t) -> acc + length(t))"
+            f" AS DOUBLE) / size({toks}))")
 
 
-def quality_score(text: Column) -> Column:
+@sql_builder
+def quality_score(x: str) -> str:
     """Composite 0..4 quality heuristic (each signal contributes one point):
     reasonable length, low punctuation, low digits, sane avg word length.
     Empty/NULL text scores 0 — the nullif-guarded ratios are NULL there
     and an unguarded sum propagated NULL, so the worst-quality input
     slipped BOTH a `score < n` bad-filter and its complement
     (the oracles carry the same COALESCE)."""
-    return F.coalesce(
-        (F.length(text).between(50, 20000).cast("int")
-         + (punct_ratio(text) < 0.10).cast("int")
-         + (digit_ratio(text) < 0.20).cast("int")
-         + avg_word_len(text).between(2.0, 12.0).cast("int")).cast("long"),
-        F.lit(0).cast("long"))
+    awl = avg_word_len.sql(x)
+    return (
+        f"coalesce(CAST("
+        f"CAST((length({x}) >= 50 AND length({x}) <= 20000) AS INT)"
+        f" + CAST(({punct_ratio.sql(x)} < 0.1D) AS INT)"
+        f" + CAST(({digit_ratio.sql(x)} < 0.2D) AS INT)"
+        f" + CAST(({awl} >= 2.0D AND {awl} <= 12.0D) AS INT)"
+        f" AS BIGINT), CAST(0 AS BIGINT))")
 
 
 def normalize_text(text: Column) -> Column:
-    """Canonical form for fingerprinting: lowercase, collapse whitespace."""
+    """Canonical form for fingerprinting: lowercase, collapse whitespace
+    (:func:`norm_sql` is the same expression as SQL text)."""
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
@@ -125,7 +189,8 @@ def fingerprint_h32(text: Column) -> Column:
     return hash32(normalize_text(text))
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
+@sql_builder
+def word_shingles(x: str, k: int = 3) -> str:
     """Distinct k-word shingles of the normalized text (array<string>).
     Row-local (no shuffle); the building block for MinHash/Jaccard dedup.
 
@@ -135,18 +200,14 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     shingle per offset (no CSE across lambda boundaries; the same
     pattern measured 12x slower in dup_ngram_fraction), O(words x len)
     per document instead of O(k) token-array evaluations."""
-    import functools
-
-    toks = F.split(normalize_text(text), " ")
-    n = F.size(toks)
-    m = F.greatest(n - k + 1, F.lit(0))
-    parts = [F.slice(toks, j + 1, m) for j in range(k)]
-    shingles = functools.reduce(
-        lambda acc, nxt: F.zip_with(acc, nxt,
-                                    lambda a, b: F.concat_ws(" ", a, b)),
-        parts)
-    return F.when(n >= k, F.array_distinct(shingles)
-                  ).otherwise(F.array(normalize_text(text)))
+    toks = f"split({norm_sql(x)}, ' ')"
+    m = f"greatest(size({toks}) - {k} + 1, 0)"
+    shingles = f"slice({toks}, 1, {m})"
+    for j in range(1, k):
+        shingles = (f"zip_with({shingles}, slice({toks}, {j + 1}, {m}), "
+                    f"(a, b) -> concat_ws(' ', a, b))")
+    return (f"CASE WHEN size({toks}) >= {k} THEN array_distinct({shingles})"
+            f" ELSE array({norm_sql(x)}) END")
 
 
 def bm25_scores(docs, terms: list[str], *, k1: float = 1.2, b: float = 0.75,

@@ -11,6 +11,13 @@ to also hold on a large multi-executor cluster:
 - Arrow enabled: every Pandas-UDF path in operators/ is Arrow-batched.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   driver/executors and match the DuckDB oracle.
+- DataFrame debugging off: with it on (PySpark 4's default) every
+  ``functions.*`` call and ``Column`` method captures its Python call site
+  through about 8 extra py4j round-trips, which dominated the build time of
+  the large operator expressions.  The cost: a DataFrame-API error's query
+  context no longer names the Python file:line (SQL errors keep their SQL
+  context).  PySpark caches the flag on first use, so it only takes effect
+  when set as the process's first session is built.
 """
 
 from __future__ import annotations
@@ -40,6 +47,8 @@ _DEFAULTS = {
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
     # UI off for test/bench runs; a real deployment can re-enable.
     "spark.ui.enabled": "false",
+    # PySpark reads this once per process, from the first active session
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -191,32 +191,37 @@ def _merge_locked(spark: SparkSession, base_dir: str, updates: DataFrame,
             updates, base_dir,
             keep_extra=[partition_col] + ([op_col] if op_col else []),
             mode="write")
-    # 1. touched partitions — the ONLY driver-side materialization, bounded
-    #    by the batch's partition fan-out
-    parts = [r[0] for r in
-             updates.select(partition_col).distinct().collect()]
-    if not parts:
+    # 1. touched partitions + both batch checks in ONE aggregate query, so
+    #    ``updates`` is computed once (a probe per check re-ran its whole
+    #    plan): per key, the distinct partition count, whether a NULL
+    #    partition value occurs and the key's partition set; then one
+    #    global row over those.  The driver only sees the batch's
+    #    partition fan-out.
+    per_key = updates.groupBy(key).agg(
+        F.countDistinct(partition_col).alias("np"),
+        F.max(F.col(partition_col).isNull()).alias("has_null"),
+        F.collect_set(partition_col).alias("ps"))
+    probe = per_key.agg(
+        F.max("np").alias("np"), F.max("has_null").alias("has_null"),
+        F.array_distinct(F.flatten(F.collect_list("ps"))).alias("parts")
+    ).collect()[0]
+    if probe["has_null"] is None:  # empty batch
         return []
     # NULL partition values are rejected up front: the isin() base-read
     # filter below can never match NULL, so a NULL-keyed update would stage
     # a __HIVE_DEFAULT_PARTITION__ directory holding ONLY the update rows
     # and the swap would silently drop the base rows of that partition.
-    # (Same free probe as the fan-out collect — NULL surfaces as None in
-    # ``parts``, no extra job.)
-    if any(p is None for p in parts):
+    if probe["has_null"]:
         raise ValueError(
             f"updates carry NULL {partition_col!r} values — NULL partitions "
             f"cannot be merged safely (isin-based partition pruning skips "
             f"them); filter or backfill the partition column first")
-    # stable-partition contract check over the visible keys: one partition
-    # value per key within the batch (cheap — update-batch sized)
-    bad = (updates.groupBy(key)
-           .agg(F.countDistinct(partition_col).alias("np"))
-           .filter(F.col("np") > 1))
-    if not bad.isEmpty():
+    # stable-partition contract: one partition value per key in the batch
+    if probe["np"] > 1:
         raise ValueError(
             f"updates carry multiple {partition_col!r} values for one "
             f"{key!r} — partition value must be stable per key")
+    parts = list(probe["parts"])
 
     # 2. prune the base read to touched partitions — mode='write': this
     #    frame's carried rows are REWRITTEN into the staged partitions,

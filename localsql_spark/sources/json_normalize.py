@@ -16,13 +16,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from localsql_spark.operators.text import sql_ident
+
 
 def _qcol(name: str):
     """Backtick-quoted column reference with backticks in the NAME escaped
-    (same rule as engine.table_info) — a JSON key containing a backtick
-    would otherwise produce an invalid quoted identifier and crash the
-    load."""
-    return F.col("`" + name.replace("`", "``") + "`")
+    — a JSON key containing a backtick would otherwise produce an invalid
+    quoted identifier and crash the load."""
+    return F.col(sql_ident(name))
 
 
 def _flatten_cols(schema: StructType, parent: Column, prefix: str) -> list[Column]:

@@ -341,8 +341,8 @@ def corpus_health_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "source",
         F.md5(T.normalize_text(F.col("text"))).alias("text_hash"),
-        T.token_count_ws(F.col("text")).alias("ws_tokens"),
-        T.quality_score(F.col("text")).alias("quality"))
+        T.token_count_ws("text").alias("ws_tokens"),
+        T.quality_score("text").alias("quality"))
     return (scored.groupBy("source")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  (F.count(F.lit(1)) - F.countDistinct("text_hash"))

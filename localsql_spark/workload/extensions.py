@@ -56,7 +56,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir)["documents"]
     return docs.select(
         "doc_id",
-        T.token_count_ws(F.col("text")).alias("ws_tokens"),
+        T.token_count_ws("text").alias("ws_tokens"),
         T.token_count_words(F.col("text")).alias("word_tokens"),
         F.length("text").cast("long").alias("chars"),
         (F.length("text").cast("long") == F.col("n_chars")).alias("chars_match"))
@@ -92,11 +92,11 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         n_words.cast("long").alias("n_words"),
         avg_wlen.alias("avg_wlen"),
-        T.punct_ratio(F.col("text")).alias("punct_r"),
-        T.digit_ratio(F.col("text")).alias("digit_r"),
+        T.punct_ratio("text").alias("punct_r"),
+        T.digit_ratio("text").alias("digit_r"),
         (F.length("text").between(50, 20000).cast("int")
-         + (T.punct_ratio(F.col("text")) < 0.10).cast("int")
-         + (T.digit_ratio(F.col("text")) < 0.20).cast("int")
+         + (T.punct_ratio("text") < 0.10).cast("int")
+         + (T.digit_ratio("text") < 0.20).cast("int")
          + avg_wlen.between(2.0, 12.0).cast("int")).cast("long").alias("quality"))
 
 
@@ -127,7 +127,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-heuristic language ID (operators.text.langid): argmax of
     per-language stopword hits, fixed tie order, 'und' when nothing hits."""
     docs = load(spark, sf_dir)["documents"]
-    pred = T.langid(F.col("text"))
+    pred = T.langid("text")
     return docs.select(
         "doc_id",
         F.col("lang").alias("lang_true"),
@@ -193,7 +193,7 @@ def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutations, single-pass fold) — the per-document half of MinHash-LSH,
     fully row-local (operators.dedup.minhash_signature).""".format(n=D.N_MINHASH)
     docs = load(spark, sf_dir)["documents"]
-    sig = D.minhash_signature(F.col("text"))
+    sig = D.minhash_signature("text")
     return docs.select(
         "doc_id",
         F.concat_ws("|", F.transform(sig, lambda c: c.cast("string")))
@@ -255,7 +255,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document — row-local bit-vote expression
     (operators.dedup.simhash32); near-dups then cluster by hamming distance."""
     docs = load(spark, sf_dir)["documents"]
-    return docs.select("doc_id", D.simhash32(F.col("text")).alias("simhash"))
+    return docs.select("doc_id", D.simhash32("text").alias("simhash"))
 
 
 @query("dedup_ngram_jaccard", oracle=f"""
@@ -621,8 +621,8 @@ def _clean_corpus_parts(spark: SparkSession, sf_dir: str):
     docs = load(spark, sf_dir)["documents"]
     quality = track_persist(spread(docs).filter(
         F.length("text").between(50, 20000)
-        & (T.punct_ratio(F.col("text")) < 0.10)
-        & (T.digit_ratio(F.col("text")) < 0.20)))
+        & (T.punct_ratio("text") < 0.10)
+        & (T.digit_ratio("text") < 0.20)))
     exact_keep = (quality
                   .groupBy(T.fingerprint_md5(F.col("text")).alias("h"))
                   .agg(F.min("doc_id").alias("doc_id"))
@@ -866,7 +866,7 @@ def pack_documents_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load(spark, sf_dir)["documents"]
-    n_tok = T.token_count_ws(F.col("text"))
+    n_tok = T.token_count_ws("text")
     w = (Window.partitionBy("lang").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     return (docs.select("doc_id", "lang", n_tok.alias("n_tok"))
@@ -948,7 +948,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.regexp_extract_all(F.lower("text"), F.lit(pat), F.lit(0)))
          .cast("long").alias("bpe_tokens"),
-        T.token_count_ws(F.col("text")).alias("ws_tokens"))
+        T.token_count_ws("text").alias("ws_tokens"))
 
 
 @query("mix_sources_weighted", oracle="""

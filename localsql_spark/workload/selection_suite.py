@@ -226,7 +226,7 @@ def export_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir)["documents"]
     scored = docs.select("doc_id", "text",
-                         T.quality_score(F.col("text")).alias("score"))
+                         T.quality_score("text").alias("score"))
     scratch = (Path(__file__).resolve().parent.parent.parent / ".cache"
                / "curriculum_shards" / Path(sf_dir.rstrip("/")).name)
     shutil.rmtree(scratch, ignore_errors=True)

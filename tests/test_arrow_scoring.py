@@ -276,6 +276,13 @@ def test_kmeans_update_matches_relational(spark, corpus, cents):
     assign = S.kmeans_assign(corpus, cents)
     _assert_same(S.kmeans_update(corpus, assign),
                  S.kmeans_update_relational(corpus, assign), ["cell"])
+    # NULL group key: a group of its own on both sides, not dropped
+    null_key = assign_kv.withColumn(
+        "cluster_id", F.when(F.col("vec_id") % 3 != 0, F.col("cluster_id")))
+    assert null_key.filter(F.col("cluster_id").isNull()).count() == 4
+    upd = S.kmeans_update(corpus, null_key)
+    assert None in {r.cell for r in upd.collect()}
+    _assert_same(upd, S.kmeans_update_relational(corpus, null_key), ["cell"])
 
 
 def test_kmeans_update_partitioning_invariant(spark, corpus, cents):

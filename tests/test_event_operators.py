@@ -395,9 +395,9 @@ def test_empty_text_guards(spark):
 
     df = spark.createDataFrame([("",), ("   ",), ("two words",)], "text string")
     rows = df.select(
-        T.token_count_ws(F.col("text")).alias("ws"),
-        T.punct_ratio(F.col("text")).alias("pr"),
-        T.digit_ratio(F.col("text")).alias("dr")).collect()
+        T.token_count_ws("text").alias("ws"),
+        T.punct_ratio("text").alias("pr"),
+        T.digit_ratio("text").alias("dr")).collect()
     assert [r["ws"] for r in rows] == [0, 0, 2]
     assert rows[0]["pr"] is None and rows[0]["dr"] is None
     assert rows[2]["pr"] == 0.0

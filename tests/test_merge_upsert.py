@@ -121,6 +121,34 @@ def test_merge_rejects_null_partition_values(spark, tmp_path):
     assert got == {(1, "a"), (2, "a"), (3, "b"), (4, "c")}
 
 
+def test_merge_null_beside_a_value_for_one_key_is_the_null_error(
+        spark, tmp_path):
+    """countDistinct skips NULL, so a key with one NULL and one 'en' row
+    counts one partition value: the NULL check must still fire, and fire
+    ahead of the stable-partition check."""
+    base_dir = str(tmp_path / "tbl")
+    _write_base(spark, base_dir)
+    mixed = spark.createDataFrame(
+        [(9, None, "nine", 1), (9, "en", "nine", 2)],
+        "k long, p string, txt string, version int")
+    with pytest.raises(ValueError, match="NULL"):
+        merge_into_partitioned(spark, base_dir, mixed, key="k",
+                               version="version", partition_col="p")
+    got = {(r.k, r.p) for r in spark.read.parquet(base_dir).collect()}
+    assert got == {(1, "a"), (2, "a"), (3, "b"), (4, "c")}
+
+
+def test_merge_empty_batch_touches_nothing(spark, tmp_path):
+    base_dir = str(tmp_path / "tbl")
+    _write_base(spark, base_dir)
+    before = _snapshot(base_dir)
+    empty = spark.createDataFrame(
+        [], "k long, p string, txt string, version int")
+    assert merge_into_partitioned(spark, base_dir, empty, key="k",
+                                  version="version", partition_col="p") == []
+    assert _snapshot(base_dir) == before
+
+
 def test_merge_base_read_is_partition_pruned(spark, tmp_path):
     """The base-side scan must carry a PartitionFilters entry on the touched
     values — proportional-to-footprint I/O is the whole point."""

@@ -7,6 +7,9 @@ Spark event log; afterwards the log is parsed into, per query:
 
 - total wall, number of Spark jobs, sum of job walls, and the DRIVER GAP
   (wall - sum of job walls: planning, collect processing, driver file I/O);
+- py4j round-trips (``GatewayClient.send_command`` calls) made while
+  BUILDING the DataFrame and while RUNNING its action — the Python-side
+  share of the driver gap, one socket round-trip each;
 - the slowest stages (wall, summed executor task time, callsite name).
 
 Usage:  python tools/profile_query.py q1 q2 ...   [env: SPARK_GRAFT_SF_DIR]
@@ -23,6 +26,34 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+
+class Py4jCalls:
+    """Counts the py4j round-trips this thread makes: wraps
+    ``GatewayClient.send_command`` (every JVM call and attribute lookup
+    from Python goes through it) for the counter's lifetime; ``n`` is the
+    running count.  Calls from other threads are not counted — notably
+    py4j's finalizer thread, which releases garbage-collected Java
+    objects at times unrelated to the work being measured."""
+
+    def __init__(self) -> None:
+        import threading
+
+        from py4j.java_gateway import GatewayClient
+
+        self.n = 0
+        self._cls, self._orig = GatewayClient, GatewayClient.send_command
+        orig, owner = self._orig, threading.get_ident()
+
+        def send_command(client, *args, **kwargs):
+            if threading.get_ident() == owner:
+                self.n += 1
+            return orig(client, *args, **kwargs)
+
+        GatewayClient.send_command = send_command
+
+    def close(self) -> None:
+        self._cls.send_command = self._orig
 
 
 def parse_event_log(path: Path) -> dict:
@@ -95,6 +126,8 @@ def main() -> None:
     # mark the timed window of each query with a job-description label so
     # the event-log jobs can be attributed (guide §1.5)
     windows: dict[str, tuple[float, float]] = {}
+    calls: dict[str, tuple[int, int]] = {}
+    py4j = Py4jCalls()
     for name in names:
         fn = queries.get(name)
         if fn is None:
@@ -104,12 +137,17 @@ def main() -> None:
         cleanup()
         spark.sparkContext.setJobDescription(name)
         t0 = time.time()
-        fn(spark, sf_dir).count()
+        n0 = py4j.n
+        df = fn(spark, sf_dir)
+        n1 = py4j.n
+        df.count()
         t1 = time.time()
+        calls[name] = (n1 - n0, py4j.n - n1)
         spark.sparkContext.setJobDescription(None)
         cleanup()
         windows[name] = (t0, t1)
         print(f"# {name}: {t1 - t0:.3f}s", file=sys.stderr)
+    py4j.close()
     app_id = spark.sparkContext.applicationId
     spark.stop()
 
@@ -146,11 +184,14 @@ def main() -> None:
             "n_jobs": len(jobs),
             "sum_job_walls": sum_jobs,
             "driver_gap": round(wall - sum_jobs, 3),
+            "py4j_build": calls[name][0],
+            "py4j_run": calls[name][1],
             "job_walls": job_walls,
             "top_stages": stage_rows[:12],
         }
         print(f"## {name}: wall={wall}s jobs={len(jobs)} "
-              f"sum_job_walls={sum_jobs}s driver_gap={out[name]['driver_gap']}s",
+              f"sum_job_walls={sum_jobs}s driver_gap={out[name]['driver_gap']}s"
+              f" py4j_calls={calls[name][0]}+{calls[name][1]} (build+run)",
               file=sys.stderr)
         for r in stage_rows[:8]:
             print(f"    stage {r['stage']:>4} wall={r['wall']:>7.3f}s "
