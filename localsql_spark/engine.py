@@ -129,7 +129,7 @@ class LocalSparkSQL:
         (no per-column jobs; reference: localsql/localsql.py:226-228)."""
         from pyspark.sql import functions as F  # noqa: N812
 
-        from localsql_spark.operators.text import sql_ident
+        from localsql_spark.operators.text import qcol
         df = self.tables[name]
         df.printSchema()
         # backtick-quote column references: flattened-JSON tables carry
@@ -141,7 +141,7 @@ class LocalSparkSQL:
             rows_alias += "_"
         stats = df.agg(
             F.count(F.lit(1)).alias(rows_alias),
-            *[F.count(F.col(sql_ident(c))).alias(c)
+            *[F.count(qcol(c)).alias(c)
               for c in df.columns]).collect()[0]
         print(f"{stats[rows_alias]} entries, {len(df.columns)} columns")
         for c in df.columns:
@@ -317,7 +317,7 @@ class LocalSparkSQL:
         text = opts.get("text", "text")
         id_col = opts.get("id", "doc_id")
         out = df.select(
-            F.col(id_col),
+            T.qcol(id_col),
             T.quality_score(text).alias("quality_score"),
             T.langid(text).alias("lang"),
             T.token_count_ws(text).alias("tokens_ws"),

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from localsql_spark.operators import spread, track_persist
 from localsql_spark.sinks.locks import locked_by
-from localsql_spark.operators.text import (norm_sql, normalize_text,
+from localsql_spark.operators.text import (norm_sql, normalize_text, qcol,
                                           sql_builder, word_shingles)
 
 N_MINHASH = 16
@@ -109,10 +109,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     text) (hash keys, not full texts, move in the exchange's groupBy key).
     Returns (text_hash, keep_id, copies)."""
     return (spread(df)
-            .select(F.md5(normalize_text(F.col(text_col))).alias("text_hash"),
-                    F.col(id_col))
+            .select(F.md5(normalize_text(qcol(text_col))).alias("text_hash"),
+                    qcol(id_col))
             .groupBy("text_hash")
-            .agg(F.min(id_col).alias("keep_id"),
+            .agg(F.min(qcol(id_col)).alias("keep_id"),
                  F.count(F.lit(1)).alias("copies")))
 
 
@@ -144,13 +144,13 @@ def exact_dedup_incremental(spark: SparkSession, store_path: str,
     store = spark.read.option("recursiveFileLookup", "true").parquet(
         store_path).select("text_hash")
     h = spread(new).select(
-        F.col(id_col),
-        F.md5(normalize_text(F.col(text_col))).alias("text_hash"))
-    w = Window.partitionBy("text_hash").orderBy(id_col)
+        qcol(id_col),
+        F.md5(normalize_text(qcol(text_col))).alias("text_hash"))
+    w = Window.partitionBy("text_hash").orderBy(qcol(id_col))
     first = (h.withColumn("__rn", F.row_number().over(w))
              .filter(F.col("__rn") == 1).drop("__rn"))
     return first.join(store, "text_hash", "left_anti") \
-                .select(id_col, "text_hash")
+                .select(qcol(id_col), "text_hash")
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -249,7 +249,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text",
             "or ngram_jaccard_pairs for looser matching")
     sh = track_persist(
         spread(df)
-        .select(F.col(id_col).alias("doc_id"),
+        .select(qcol(id_col).alias("doc_id"),
                 simhash32(text_col).alias("simhash")))
     bands = sh.select(
         "doc_id", "simhash",
@@ -282,8 +282,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    sh = spread(df).select(F.col(id_col).alias("doc_id"),
-                           F.col(block_col).alias("blk"),
+    sh = spread(df).select(qcol(id_col).alias("doc_id"),
+                           qcol(block_col).alias("blk"),
                            F.explode(word_shingles(text_col, 3))
                            .alias("s"))
     if df_cap is not None:
@@ -554,7 +554,7 @@ def compute_signatures(df: DataFrame, text_col: str = "text",
     """(doc_id, sig) minhash signature table for ``df`` — the unit every
     LSH variant here joins on and the schema the signature store persists."""
     return spread(df).select(
-        F.col(id_col).alias("doc_id"),
+        qcol(id_col).alias("doc_id"),
         minhash_signature(text_col, n).alias("sig"))
 
 
@@ -1189,8 +1189,8 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    sh = spread(df).select(F.col(id_col).alias("doc_id"),
-                           F.col(block_col).alias("blk"),
+    sh = spread(df).select(qcol(id_col).alias("doc_id"),
+                           qcol(block_col).alias("blk"),
                            F.explode(word_shingles(text_col, 3))
                            .alias("s"))
     if df_cap is not None:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from localsql_spark.sinks.locks import locked_by
 from localsql_spark.operators import spread, spread_derived
+from localsql_spark.operators.text import qcol
 
 _DEC = "decimal(28,12)"
 
@@ -691,7 +692,7 @@ def _collect_query_vectors(queries: DataFrame, id_col: str, vec_col: str):
     NULL/NULL-element vectors, which NULL-poison every cosine).  Collect
     license: the relational paths broadcast this exact table."""
     out = {}
-    for r in queries.select(id_col, vec_col).collect():
+    for r in queries.select(qcol(id_col), qcol(vec_col)).collect():
         v = r[1]
         if v is not None:
             v = list(v)
@@ -772,8 +773,8 @@ def arrow_cosine_scan(corpus: DataFrame, id_col: str, vec_col: str,
         q_ids_np = np.asarray(q_ids, dtype=np.int64)
         for pdf in batches:
             rows_by_d: dict[int, list] = {}
-            vals = pdf[vec_col]
-            ids = pdf[id_col]
+            vals = pdf["vec"]
+            ids = pdf["id"]
             n = len(pdf)
             # full (n, kq) score grid, NULL by default
             grid = np.full((n, kq), np.nan)
@@ -808,8 +809,10 @@ def arrow_cosine_scan(corpus: DataFrame, id_col: str, vec_col: str,
                 .reset_index(drop=True),
                 out_col: out})
 
+    # fixed input names: mapInPandas re-resolves each input column by
+    # name, which a dotted or backticked user name would not survive
     return (spread(corpus)
-            .select(F.col(id_col), F.col(vec_col))
+            .select(qcol(id_col).alias("id"), qcol(vec_col).alias("vec"))
             .mapInPandas(run, schema=schema))
 
 

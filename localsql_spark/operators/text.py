@@ -53,6 +53,12 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def qcol(name: str) -> Column:
+    """The column NAMED ``name`` (:func:`sql_ident`): the one way an
+    operator refers to a user-supplied column."""
+    return F.col(sql_ident(name))
+
+
 _WS = sql_str(r"\s+")
 
 

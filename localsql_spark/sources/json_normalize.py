@@ -16,14 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from localsql_spark.operators.text import sql_ident
-
-
-def _qcol(name: str):
-    """Backtick-quoted column reference with backticks in the NAME escaped
-    — a JSON key containing a backtick would otherwise produce an invalid
-    quoted identifier and crash the load."""
-    return F.col(sql_ident(name))
+from localsql_spark.operators.text import qcol
 
 
 def _flatten_cols(schema: StructType, parent: Column, prefix: str) -> list[Column]:
@@ -46,7 +39,7 @@ def flatten_structs(df: DataFrame) -> DataFrame:
     """
     cols = []
     for field in df.schema.fields:
-        base = _qcol(field.name)
+        base = qcol(field.name)
         if isinstance(field.dataType, StructType):
             cols.extend(_flatten_cols(field.dataType, base, f"{field.name}."))
         else:
@@ -63,7 +56,7 @@ def stringify_arrays(df: DataFrame) -> DataFrame:
     cols = []
     for field in df.schema.fields:
         if isinstance(field.dataType, (ArrayType, StructType, MapType)):
-            cols.append(F.to_json(_qcol(field.name)).alias(field.name))
+            cols.append(F.to_json(qcol(field.name)).alias(field.name))
         else:
-            cols.append(_qcol(field.name))
+            cols.append(qcol(field.name))
     return df.select(*cols)

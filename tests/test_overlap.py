@@ -79,7 +79,7 @@ def test_delegation_requires_held_lock(tmp_path):
             pass
 
 
-def test_run_overlapped_results_and_failure_gathering():
+def test_run_overlapped_results_and_failure_gathering(spark):
     seen: list[str] = []
 
     def ok(name):
@@ -93,11 +93,12 @@ def test_run_overlapped_results_and_failure_gathering():
         raise ValueError("chain failed")
 
     with pytest.raises(ValueError, match="chain failed"):
-        run_overlapped([("a", ok("a")), ("boom", boom), ("b", ok("b"))])
+        run_overlapped([("a", ok("a")), ("boom", boom), ("b", ok("b"))],
+                       spark=spark)
     # every task ran to completion even though one failed
     assert sorted(seen) == ["a", "b", "boom"]
 
-    res = run_overlapped([("a", ok("a")), ("b", ok("b"))])
+    res = run_overlapped([("a", ok("a")), ("b", ok("b"))], spark=spark)
     assert res == {"a": "A", "b": "B"}
 
 

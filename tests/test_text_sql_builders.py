@@ -181,6 +181,50 @@ def test_quality_command_on_dotted_column_name(spark, edge):
         eng.close()
 
 
+# a dotted and a backticked name for every column a corpus command takes
+ODD_NAMES = {"doc_id": "we`ird", "text": "nest.a", "lang": "b.l`k",
+             "vec_id": "we`ird", "embedding": "nest.a"}
+CORPUS_CMDS = [
+    ("\\dedup", "exact {t}_docs text={text} id={doc_id}"),
+    ("\\dedup", "minhash {t}_docs text={text} id={doc_id} threshold=0.3"),
+    ("\\dedup", "simhash {t}_docs text={text} id={doc_id}"),
+    ("\\dedup", "ngram {t}_docs text={text} id={doc_id} block={lang}"),
+    ("\\knn", "{t}_vecs k=3 vec={embedding} id={vec_id}"),
+    ("\\quality", "{t}_docs text={text} id={doc_id}")]
+
+
+def test_corpus_commands_on_dotted_and_backticked_names(spark):
+    from localsql_spark.engine import LocalSparkSQL
+    from localsql_spark.workload import load
+    from tests.conftest import SF_SMALL
+
+    tables = load(spark, SF_SMALL)
+    inputs = {"docs": tables["documents"].where("doc_id < 200")
+              .select("doc_id", "text", "lang"),
+              "vecs": tables["embeddings"].where("vec_id < 100")
+              .select("vec_id", "embedding")}
+    plain = {c: c for c in ODD_NAMES}
+    for t, names in (("n", plain), ("o", ODD_NAMES)):
+        for table, df in inputs.items():
+            df.select(*[F.col(c).alias(names[c]) for c in df.columns]) \
+                .createOrReplaceTempView(f"{t}_{table}")
+    eng = LocalSparkSQL(spark)
+    try:
+        for i, (cmd, args) in enumerate(CORPUS_CMDS):
+            want = eng.pipeline_command(
+                cmd, args.format(t="n", **plain) + f" AS n{i}")
+            got = eng.pipeline_command(
+                cmd, args.format(t="o", **ODD_NAMES) + f" AS o{i}")
+            # only \quality passes an input column (its id) through
+            assert got.columns == [ODD_NAMES[c] if c == "doc_id" else c
+                                   for c in want.columns]
+            rows = sorted(repr(tuple(r)) for r in want.collect())
+            assert rows and sorted(
+                repr(tuple(r)) for r in got.collect()) == rows, args
+    finally:
+        eng.close()
+
+
 # py4j round-trips the test thread makes to BUILD each command (no Spark
 # job runs): twice the 159 / 173 / 59 the SQL-text builders take; the
 # per-node F.* formulation took 4,161 / 1,858 / 2,022

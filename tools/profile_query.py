@@ -10,9 +10,13 @@ Spark event log; afterwards the log is parsed into, per query:
 - py4j round-trips (``GatewayClient.send_command`` calls) made while
   BUILDING the DataFrame and while RUNNING its action — the Python-side
   share of the driver gap, one socket round-trip each;
+- generated classes compiled, and the compile milliseconds, while building
+  and while running (``session.codegen_compiles``): each is a miss of
+  Spark's codegen cache, so a warm query that still compiles shows it;
 - the slowest stages (wall, summed executor task time, callsite name).
 
-Usage:  python tools/profile_query.py q1 q2 ...   [env: SPARK_GRAFT_SF_DIR]
+Usage:  python tools/profile_query.py q1 q2 ...
+        [env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_DRIVER_MEMORY]
 Output: JSON to stdout + human summary to stderr.
 """
 
@@ -107,13 +111,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = Path(tempfile.mkdtemp(prefix="spark-events-"))
     from localsql_spark.operators import cleanup
-    from localsql_spark.session import get_spark
+    from localsql_spark.session import codegen_compiles, get_spark
     from localsql_spark.workload import all_queries, load
 
-    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "16g")
     spark = get_spark(app_name="profile_query", extra_conf={
-        "spark.driver.memory": heap,
-        "spark.driver.extraJavaOptions": f"-Xms{heap} -XX:+AlwaysPreTouch",
         "spark.eventLog.enabled": "true",
         "spark.eventLog.dir": evdir.as_uri(),
         "spark.eventLog.compress": "false",
@@ -127,6 +128,7 @@ def main() -> None:
     # the event-log jobs can be attributed (guide §1.5)
     windows: dict[str, tuple[float, float]] = {}
     calls: dict[str, tuple[int, int]] = {}
+    compiles: dict[str, dict] = {}
     py4j = Py4jCalls()
     for name in names:
         fn = queries.get(name)
@@ -137,12 +139,17 @@ def main() -> None:
         cleanup()
         spark.sparkContext.setJobDescription(name)
         t0 = time.time()
-        n0 = py4j.n
+        n0, c0 = py4j.n, codegen_compiles(spark)
         df = fn(spark, sf_dir)
-        n1 = py4j.n
+        n1, c1 = py4j.n, codegen_compiles(spark)
         df.count()
         t1 = time.time()
+        c2 = codegen_compiles(spark)
         calls[name] = (n1 - n0, py4j.n - n1)
+        compiles[name] = {
+            "compiles_build": c1[0] - c0[0], "compiles_run": c2[0] - c1[0],
+            "compile_ms_build": round(c1[1] - c0[1], 1),
+            "compile_ms_run": round(c2[1] - c1[1], 1)}
         spark.sparkContext.setJobDescription(None)
         cleanup()
         windows[name] = (t0, t1)
@@ -186,13 +193,17 @@ def main() -> None:
             "driver_gap": round(wall - sum_jobs, 3),
             "py4j_build": calls[name][0],
             "py4j_run": calls[name][1],
+            **compiles[name],
             "job_walls": job_walls,
             "top_stages": stage_rows[:12],
         }
+        c = compiles[name]
         print(f"## {name}: wall={wall}s jobs={len(jobs)} "
               f"sum_job_walls={sum_jobs}s driver_gap={out[name]['driver_gap']}s"
-              f" py4j_calls={calls[name][0]}+{calls[name][1]} (build+run)",
-              file=sys.stderr)
+              f" py4j_calls={calls[name][0]}+{calls[name][1]}"
+              f" compiles={c['compiles_build']}+{c['compiles_run']}"
+              f" ({c['compile_ms_build']}+{c['compile_ms_run']} ms)"
+              " (build+run)", file=sys.stderr)
         for r in stage_rows[:8]:
             print(f"    stage {r['stage']:>4} wall={r['wall']:>7.3f}s "
                   f"task_time={r['task_time']:>8.3f}s tasks={r['n_tasks']:>4} "
